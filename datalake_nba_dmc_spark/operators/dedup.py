@@ -1082,9 +1082,14 @@ def incremental_dedup(
     # exact: drop batch rows whose fingerprint exists in the corpus, then
     # keep the min-id representative per batch fingerprint — one window
     # (r16; the old min-agg + semi-join back re-scanned the batch and
-    # shuffled twice for the same keep-lowest-id-per-group decision)
+    # shuffled twice for the same keep-lowest-id-per-group decision).
+    # Rows that repeat an id inside one fingerprint group (a re-delivered
+    # row, possibly re-cased or re-spaced) tie-break on their remaining
+    # column values, so the winner never depends on partition layout;
+    # map columns are unorderable and only ever tie.
     hit_fps = hits.filter(F.col("_kind") == 0).select(F.col("_hfp").alias("_fp"))
-    w_fp = Window.partitionBy("_fp").orderBy(id_col)
+    tie_break = [c for c, t in batch.dtypes if c != id_col and "map<" not in t]
+    w_fp = Window.partitionBy("_fp").orderBy(id_col, *tie_break)
     fresh = (
         b_fp.join(F.broadcast(hit_fps), on="_fp", how="left_anti")
         .withColumn("_rn", F.row_number().over(w_fp))

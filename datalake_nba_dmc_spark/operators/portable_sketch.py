@@ -223,10 +223,15 @@ def _shingle_hashes_expr(toks: str, n: int) -> str:
     sf0.1 signature fold, bit-identical output.
 
     The caller must stage ``_tsum``/``_ln`` as real columns via
-    :func:`_with_token_sums` first (the with_shingles rule)."""
+    :func:`_with_token_sums` first (the with_shingles rule). The window
+    offsets are ``slice(sequence(1, n), 1, wl)``, never ``sequence(1,
+    wl)``: a token-less doc has ``wl = 0``, where ``sequence`` counts
+    DOWN to ``[1, 0]`` and the fold indexes an empty array — a crash
+    whenever the optimizer evaluates this expression before the
+    caller's ``size > 0`` filter (InferFiltersFromGenerate does)."""
     wl = f"CASE WHEN size({toks}) >= {n} THEN {n} ELSE size({toks}) END"
     win_sum = (
-        f"aggregate(sequence(1, {wl}), "
+        f"aggregate(slice(sequence(1, {n}), 1, {wl}), "
         "named_struct('off', CAST(0 AS BIGINT), 'tot', CAST(0 AS BIGINT)), "
         "(acc, i) -> named_struct("
         "'off', acc.off + element_at(_ln, w + i) + 1, "

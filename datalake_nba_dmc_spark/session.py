@@ -20,11 +20,17 @@ import os
 from pyspark.sql import SparkSession
 
 
-#: Dynamic SQL confs the engine depends on — safe to (re)apply on ANY
-#: session, including one the caller built without ``get_spark`` (the
-#: driver contract hands us a foreign session).
+#: Dynamic SQL confs the engine depends on — the one place each is set.
+#: Safe to (re)apply on ANY session, including one the caller built
+#: without ``get_spark``.
 RUNTIME_CONFS = {
-    # see the builder comment below / operators.dedup staging rationale
+    # InferFiltersFromGenerate synthesizes `size(arr)>0 AND isnotnull(arr)`
+    # below every explode; filter pushdown then inlines the array-building
+    # expression into that filter, re-evaluating it per row (no CSE in
+    # interpreted higher-order functions). Our explodes are over computed,
+    # by-construction non-empty arrays (shingles, LSH bands), where the
+    # inferred filter is pure overhead — measured 7.6s → 0.7s on the
+    # shingle explode at 5k docs.
     "spark.sql.optimizer.excludedRules": "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     "spark.sql.adaptive.enabled": "true",
     # Runtime row-level filtering: for a selective join, build a bloom
@@ -33,12 +39,17 @@ RUNTIME_CONFS = {
     # the dim side is selective but too large to broadcast. Free locally
     # (thresholds keep it off for tiny inputs), decisive on a cluster.
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-    # Streaming state off-heap (see the builder comment in get_spark):
-    # consulted at streaming-query start, so safe to set on any session.
+    # Streaming state-store hygiene for the 100 TB posture: the default
+    # HDFS-backed provider keeps every key's state as JVM heap objects —
+    # at hundreds of millions of stream keys (user_running_state,
+    # transition_steps, dropDuplicatesWithinWatermark) that is an
+    # executor-OOM risk and makes checkpoint snapshots O(state size).
+    # RocksDB keeps state off-heap with incremental (changelog)
+    # checkpointing; the JNI jar ships with Spark (rocksdbjni in
+    # pyspark/jars). Consulted at streaming-query start, so safe to set
+    # on any session.
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        if os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb") == "rocksdb"
-        else "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
     ),
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
 }
@@ -67,42 +78,12 @@ def get_spark(app_name: str = "datalake_nba_dmc_spark", master: str | None = Non
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # InferFiltersFromGenerate synthesizes `size(arr)>0 AND isnotnull(arr)`
-        # below every explode; filter pushdown then inlines the array-building
-        # expression into that filter, re-evaluating it per row (no CSE in
-        # interpreted higher-order functions). Our explodes are over computed,
-        # by-construction non-empty arrays (shingles, LSH bands), where the
-        # inferred filter is pure overhead — measured 7.6s → 0.7s on the
-        # shingle explode at 5k docs.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-        # Streaming state-store hygiene for the 100 TB posture: the default
-        # HDFS-backed provider keeps every key's state as JVM heap objects —
-        # at hundreds of millions of stream keys (user_running_state,
-        # transition_steps, dropDuplicatesWithinWatermark) that is an
-        # executor-OOM risk and makes checkpoint snapshots O(state size).
-        # RocksDB keeps state off-heap with incremental (changelog)
-        # checkpointing; the JNI jar ships with Spark (rocksdbjni in
-        # pyspark/jars). SPARK_GRAFT_STATE_STORE=hdfs opts back out.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-            if os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb") == "rocksdb"
-            else "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-        )
-        .config(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1693,3 +1693,119 @@ def stat_bootstrap_ci_by_segment(
     return bootstrap_ci_mean_by(
         orders, "o_orderpriority", "o_totalprice", "o_orderkey"
     )
+
+
+_DRIFT_PANEL_ORACLE = """
+WITH base AS (
+  SELECT o_orderpriority AS seg,
+         CAST(round(o_totalprice * 100) AS BIGINT) AS xs,
+         CASE WHEN o_orderdate < DATE '1998-01-01' THEN 1 ELSE 0 END AS ia
+  FROM orders
+  WHERE o_totalprice IS NOT NULL AND o_orderdate IS NOT NULL
+    AND o_orderpriority IS NOT NULL
+), g AS (
+  SELECT seg, xs, CAST(SUM(ia) AS BIGINT) AS ca,
+         CAST(SUM(1 - ia) AS BIGINT) AS cb
+  FROM base GROUP BY seg, xs
+), c AS (
+  SELECT seg, xs, ca, cb,
+         CAST(SUM(ca) OVER w AS BIGINT) AS cuma,
+         CAST(SUM(cb) OVER w AS BIGINT) AS cumb,
+         CAST(SUM(ca + cb) OVER w AS BIGINT) AS cumall
+  FROM g
+  WINDOW w AS (PARTITION BY seg ORDER BY xs ROWS UNBOUNDED PRECEDING)
+), n AS (
+  SELECT seg, CAST(SUM(ca) AS BIGINT) AS n_a, CAST(SUM(cb) AS BIGINT) AS n_b
+  FROM g GROUP BY seg
+), ks AS (
+  SELECT n.seg,
+         CAST(MAX(ABS(c.cuma * n.n_b - c.cumb * n.n_a)) * 1000000
+              // GREATEST(n.n_a * n.n_b, 1) AS BIGINT) AS ks_d_micro
+  FROM c JOIN n ON c.seg = n.seg
+  GROUP BY n.seg, n.n_a, n.n_b
+), r AS (
+  SELECT seg, CAST(SUM(ca * (2 * (cumall - (ca + cb)) + (ca + cb) + 1))
+              AS BIGINT) AS r2a
+  FROM c GROUP BY seg
+), mw AS (
+  SELECT n.seg,
+         (r.r2a - n.n_a * (n.n_a + 1)) * 1000000
+           // GREATEST(2 * n.n_a * n.n_b, 1) AS auc_micro
+  FROM r JOIN n ON r.seg = n.seg
+), bins AS (
+  SELECT seg,
+         CAST(LEAST(GREATEST(FLOOR((CAST(xs AS DOUBLE) / 100.0 - 0.0)
+                                    / 60000.0), 0), 9) AS INT) AS bucket,
+         CAST(SUM(ca) AS BIGINT) AS bin_a, CAST(SUM(cb) AS BIGINT) AS bin_b
+  FROM g GROUP BY 1, 2
+), psi AS (
+  SELECT b.seg,
+         CAST(SUM(CAST(round(round(
+               ((b.bin_a + 0.5) / (n.n_a + 5.0)
+                - (b.bin_b + 0.5) / (n.n_b + 5.0))
+               * ln(((b.bin_a + 0.5) / (n.n_a + 5.0))
+                    / ((b.bin_b + 0.5) / (n.n_b + 5.0))), 6)
+               * 1000000.0) AS BIGINT)) AS BIGINT) AS psi_micro
+  FROM bins b JOIN n ON b.seg = n.seg
+  GROUP BY b.seg
+), probs AS (SELECT unnest([50, 90]) AS p_pct
+), qa AS (
+  SELECT c.seg, p.p_pct, c.xs
+  FROM c JOIN n ON c.seg = n.seg CROSS JOIN probs p
+  WHERE n.n_a > 0 AND c.cuma >= ((p.p_pct * n.n_a + 99) // 100)
+    AND c.cuma - c.ca < ((p.p_pct * n.n_a + 99) // 100)
+), qam AS (
+  SELECT seg, MAX(CASE WHEN p_pct = 50 THEN xs END) AS q50_a_scaled,
+         MAX(CASE WHEN p_pct = 90 THEN xs END) AS q90_a_scaled
+  FROM qa GROUP BY seg
+), qb AS (
+  SELECT c.seg, p.p_pct, c.xs
+  FROM c JOIN n ON c.seg = n.seg CROSS JOIN probs p
+  WHERE n.n_b > 0 AND c.cumb >= ((p.p_pct * n.n_b + 99) // 100)
+    AND c.cumb - c.cb < ((p.p_pct * n.n_b + 99) // 100)
+), qbm AS (
+  SELECT seg, MAX(CASE WHEN p_pct = 50 THEN xs END) AS q50_b_scaled,
+         MAX(CASE WHEN p_pct = 90 THEN xs END) AS q90_b_scaled
+  FROM qb GROUP BY seg
+)
+SELECT n.seg AS o_orderpriority, n.n_a, n.n_b, ks.ks_d_micro, mw.auc_micro,
+       psi.psi_micro,
+       qam.q50_a_scaled, qbm.q50_b_scaled,
+       qam.q50_a_scaled - qbm.q50_b_scaled AS q50_delta_scaled,
+       qam.q90_a_scaled, qbm.q90_b_scaled,
+       qam.q90_a_scaled - qbm.q90_b_scaled AS q90_delta_scaled
+FROM n
+JOIN ks ON n.seg = ks.seg
+JOIN mw ON n.seg = mw.seg
+LEFT JOIN psi ON n.seg = psi.seg
+LEFT JOIN qam ON n.seg = qam.seg
+LEFT JOIN qbm ON n.seg = qbm.seg
+"""
+
+
+@query("stat_drift_panel_by_segment", oracle=_DRIFT_PANEL_ORACLE)
+def stat_drift_panel_by_segment(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The per-segment drift DASHBOARD (operators/stats.drift_panel_by):
+    exact KS, Mann-Whitney AUC, total PSI (micro) and p50/p90 per cohort
+    with deltas, per o_orderpriority, off ONE materialized counts frame —
+    the shared per-(segment, value) substrate of
+    stat_ks_drift_by_segment / stat_mann_whitney_by_segment /
+    stat_psi_by_segment / stat_exact_quantiles_by_segment, scanned once
+    and read by every finisher. Each column is bit-identical to its
+    standalone query, and the final plan holds zero scans of orders
+    (both pytest-pinned). The oracle recomputes all four families from
+    one base CTE."""
+    from datalake_nba_dmc_spark.operators.stats import drift_panel_by
+
+    orders = TableRegistry(spark, sf_dir).orders
+    return drift_panel_by(
+        orders,
+        "o_orderpriority",
+        "o_totalprice",
+        F.col("o_orderdate") < F.lit("1998-01-01").cast("date"),
+        lo=0.0,
+        hi=600000.0,
+        nbins=10,
+    )

@@ -1516,6 +1516,55 @@ def sample_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return leakage_safe_split(docs)
 
 
+def _stratified_split_oracle() -> str:
+    from datalake_nba_dmc_spark.operators.cdc import _M
+    from datalake_nba_dmc_spark.operators.hyperball import mixer_sql
+
+    mix = mixer_sql(f"(((cluster_id % {_M}) + {_M}) % {_M})", "duck")
+    clusters = _minhash_clusters_oracle(16, 4, 3)
+    return f"""
+    WITH cl AS ({clusters}), m AS (
+      SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_mass
+      FROM cl GROUP BY cluster_id
+    ), k AS (
+      SELECT cluster_id, cluster_mass, {mix} AS mixk FROM m
+    ), c AS (
+      SELECT cluster_id, cluster_mass,
+             CAST(SUM(cluster_mass) OVER (ORDER BY mixk, cluster_id
+                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+      FROM k
+    ), n AS (SELECT CAST(SUM(cluster_mass) AS BIGINT) AS nn FROM m)
+    SELECT cl.doc_id, cl.cluster_id, c.cluster_mass,
+           CASE WHEN 100 * (2 * (c.cum - c.cluster_mass) + c.cluster_mass)
+                     < 2 * n.nn * 80 THEN 'train'
+                WHEN 100 * (2 * (c.cum - c.cluster_mass) + c.cluster_mass)
+                     < 2 * n.nn * 90 THEN 'val'
+                ELSE 'test' END AS split
+    FROM cl JOIN c USING (cluster_id) CROSS JOIN n
+    """
+
+
+@query("sample_stratified_split", oracle=_stratified_split_oracle())
+def sample_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """STRATIFIED leakage-safe split (operators/portable_sketch.
+    leakage_safe_split_stratified): the clusters of
+    sample_leakage_safe_split laid on the deterministic mixer line and
+    cut by CUMULATIVE doc mass, boundary clusters resolved by the
+    midpoint rule (all int64) — so doc-grain val/test proportions hit
+    their targets under cluster-size skew, where the per-cluster mixer
+    bands miss them, while leakage stays impossible (every cluster in
+    exactly one split). The oracle replays the clusters closure, the
+    global running-mass window and the doubled-threshold CASE; the
+    skewed-corpus law and the real-corpus proportion bound are
+    pytest-pinned."""
+    from datalake_nba_dmc_spark.operators.portable_sketch import (
+        leakage_safe_split_stratified,
+    )
+
+    docs = TableRegistry(spark, sf_dir).documents
+    return leakage_safe_split_stratified(docs)
+
+
 def _eval_decon_split_oracle() -> str:
     from datalake_nba_dmc_spark.operators.cdc import _M
     from datalake_nba_dmc_spark.operators.hyperball import mixer_sql

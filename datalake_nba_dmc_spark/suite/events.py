@@ -1153,3 +1153,72 @@ def events_trailing_windows_multi(
         value_col="value",
         windows={"1h": "interval 1 hour", "24h": "interval 24 hours"},
     )
+
+
+_TRAILING_DISTINCT_ORACLE = """
+WITH p AS (
+  SELECT DISTINCT user_id,
+         CAST(CASE WHEN json_valid(props)
+                   THEN json_extract_string(props, '$.k') END AS BIGINT)
+           AS item,
+         ts
+  FROM events
+  WHERE event_type = 'purchase' AND user_id IS NOT NULL
+    AND ts IS NOT NULL
+    AND CAST(CASE WHEN json_valid(props)
+                  THEN json_extract_string(props, '$.k') END AS BIGINT)
+        IS NOT NULL
+), ev AS (
+  SELECT DISTINCT event_id, user_id, ts FROM events
+), feat AS (
+  SELECT e.event_id, e.user_id, e.ts,
+         CAST(COUNT(DISTINCT p.item) AS BIGINT) AS win_distinct
+  FROM ev e
+  LEFT JOIN p ON p.user_id = e.user_id
+             AND p.ts > e.ts - INTERVAL 24 HOUR AND p.ts <= e.ts
+  GROUP BY e.event_id, e.user_id, e.ts
+)
+SELECT f.event_id, f.user_id, f.ts, f.win_distinct
+FROM events x
+JOIN feat f ON x.event_id IS NOT DISTINCT FROM f.event_id
+           AND x.user_id IS NOT DISTINCT FROM f.user_id
+           AND x.ts IS NOT DISTINCT FROM f.ts
+"""
+
+
+@query("events_trailing_distinct_items", oracle=_TRAILING_DISTINCT_ORACLE)
+def events_trailing_distinct_items(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """EXACT trailing-window DISTINCT count (operators/temporal.
+    trailing_distinct_count): distinct purchased items (props.k) per
+    event in the trailing 24 h — the feature prefix-sum differencing
+    cannot express. Interval stabbing: each distinct (user, item, ts)
+    occurrence emits [max(prev_same_item_ts, ts-24h), ts) on the
+    window-start axis, and the distinct count is the number of intervals
+    containing t-24h — one running sum + one as-of, never a range join.
+    The oracle materializes the range join + COUNT(DISTINCT) definition,
+    duplication-proof (distinct-grain compute + null-safe per-row
+    fan-out, the events_trailing_windows_multi rule). Boundary semantics
+    (t-w, t] and the right-side duplication-invariance law are
+    pytest-pinned."""
+    from datalake_nba_dmc_spark.operators.temporal import (
+        trailing_distinct_count,
+    )
+
+    t = TableRegistry(spark, sf_dir)
+    ev = t.events.select("event_id", "user_id", "ts")
+    purch = t.events.filter(F.col("event_type") == "purchase").select(
+        "user_id",
+        "ts",
+        F.get_json_object("props", "$.k").cast("long").alias("item"),
+    )
+    return trailing_distinct_count(
+        ev,
+        purch,
+        key="user_id",
+        left_ts="ts",
+        right_ts="ts",
+        value_col="item",
+        window="interval 24 hours",
+    )

@@ -229,9 +229,6 @@ def test_hyperball_m64_registers_and_estimate_twin(spark):
 
 
 def _m64_twin_at(spark, SF, T, M):
-    import duckdb
-    import os as _os
-
     from pyspark.sql import functions as F
 
     from datalake_nba_dmc_spark.operators.hyperball import (
@@ -243,12 +240,9 @@ def _m64_twin_at(spark, SF, T, M):
         _hb_estimate_oracle,
         _hb_registers_oracle,
     )
+    from tools.verify_local import oracle_connection
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{_os.path.join(SF, 'documents.parquet')}'"
-    )
+    con = oracle_connection(SF)
     docs = TableRegistry(spark, SF).documents
     edges = docs.select(
         (F.col("doc_id") % 101).alias("src"),

@@ -8,11 +8,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
-from datalake_nba_dmc_spark.sources import TABLES
 from datalake_nba_dmc_spark.suite import load_all
+from tools.verify_local import oracle_connection
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -23,12 +22,7 @@ needs_testdata = pytest.mark.skipif(
 
 @needs_testdata
 def test_every_oracle_parses_and_binds():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{os.path.join(SF0001, t + '.parquet')}'"
-        )
+    con = oracle_connection(SF0001)
     broken = []
     n = 0
     for name, spec in load_all().items():

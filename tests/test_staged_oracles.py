@@ -1,17 +1,26 @@
-"""Differential DuckDB twins for the r9-staged operators (registration is
-next round's window work per the registry freeze; these tests prove the
-oracles are ALREADY green so the registration is a rename, not a risk).
+"""DuckDB twins and operator laws for the registered operators.
 
-Each test runs the Spark operator over the real sf0.001 documents table
-and an independently formulated DuckDB SQL twin over the same parquet,
-comparing full sorted row sets (exact integers everywhere — the suite's
-float-free contract)."""
+Two kinds of differential test live here:
+
+- ``check_registered_oracle`` runs a registered query's builder against
+  its registered oracle (``load_all()[name].oracle``) through
+  ``tools/verify_local.compare`` — the registry holds the only copy of
+  each (builder, oracle) pair. ``REGISTERED_TWINS`` lists the queries it
+  checks, under the test names and scales of the twins it replaced, with
+  the extra laws those twins asserted on the collected frame.
+- The remaining ``*_duckdb_twin`` tests are independent formulations:
+  they call an operator with parameters or inputs the registered builder
+  does not use, or pin it against SQL the registry does not hold.
+
+Both compare exact integers wherever the suite's float-free contract
+applies; the laws tests pin empty, degenerate, duplicated and
+layout-perturbed inputs."""
 
 from __future__ import annotations
 
 import os
+from functools import cache
 
-import duckdb
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -19,14 +28,6 @@ SF = "/root/testdata/sf0.001"
 needs_testdata = pytest.mark.skipif(
     not os.path.isdir(SF), reason="driver testdata not present"
 )
-
-
-def _duck():
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{os.path.join(SF, 'documents.parquet')}'"
-    )
-    return con
 
 
 #: sf0.1 parametrizations of the three heaviest DuckDB twins (51/29/24 s
@@ -38,47 +39,450 @@ def _duck():
 #: oracle covers mid-scale; run the slow set with `-m slow` (receipt in
 #: OPTIMIZATION_r16.md).
 SF01_SLOW = pytest.param("sf0.1", marks=pytest.mark.slow)
+BOTH = ("sf0.001", "sf0.1")
+TESTDATA = os.path.dirname(SF)
 
-@needs_testdata
-def test_pack_sequences_duckdb_twin(spark):
-    """pack_sequences (two-phase parallel prefix sum) vs the sequential
-    running-sum + unnest(range) formulation DuckDB executes directly."""
-    from datalake_nba_dmc_spark.operators.packing import pack_sequences
+
+@cache
+def _oracle_con(sf: str):
+    from tools.verify_local import oracle_connection
+
+    return oracle_connection(os.path.join(TESTDATA, sf))
+
+
+def check_registered_oracle(spark, name: str, sf: str, laws=None) -> None:
+    """Run the registered builder of ``name`` at scale ``sf`` against its
+    registered oracle through tools/verify_local.compare (rows +
+    columns + order-insensitive value hash), then apply
+    ``laws(frame, spark, sf)`` — invariants the oracle alone does not
+    pin — to the collected Spark frame."""
+    from datalake_nba_dmc_spark.suite import load_all
+    from tools.verify_local import compare
+
+    sfd = os.path.join(TESTDATA, sf)
+    if not os.path.isdir(sfd):
+        pytest.skip("scale dir missing")
+    spec = load_all()[name]
+    got = spec.builder(spark, sfd).toPandas()
+    want = _oracle_con(sf).execute(spec.oracle).df()
+    assert compare(got, want) == [], name
+    assert len(got) > 0, name
+    if laws is not None:
+        laws(got, spark, sf)
+
+
+def _rows(n: int, laws=None):
+    def check(df, *rest):
+        assert len(df) == n
+        if laws is not None:
+            laws(df, *rest)
+
+    return check
+
+
+def _c4_laws(df, *_):
+    # the rules actually bite on the synthetic corpus (not a vacuous twin)
+    assert (df.c4_keep == 0).any() or (df.n_kept_lines < df.n_lines).any()
+
+
+def _cms_laws(df, *_):
+    # bounded by d*w however large the corpus, and mass is conserved:
+    # every token lands once per row, so all 4 row-sums are equal
+    mass = df.groupby("row_idx").cnt.sum()
+    assert len(df) <= 4 * 64 and len(mass) == 4 and mass.nunique() == 1
+
+
+def _label_propagation_laws(df, *_):
+    # communities actually coarsen (not the identity labeling)
+    assert df.community.nunique() < 101
+
+
+def _coreness_laws(df, *_):
+    # the graph is not coreness-uniform (non-vacuous)
+    assert df.coreness.nunique() > 1
+
+
+def _triangle_laws(df, *_):
+    # the derived graph actually closes triangles (non-vacuous)
+    assert (df.triangles > 0).any()
+
+
+def _ks_laws(df, *_):
+    assert ((df.ks_d_micro >= 0) & (df.ks_d_micro <= 1_000_000)).all()
+    assert (df.ks_num <= df.n_a * df.n_b).all()
+    # drift actually measured (non-vacuous): both cohorts populated
+    assert (df.n_a > 0).all() and (df.n_b > 0).all()
+
+
+def _mw_laws(df, *_):
+    # the U-sum law, per row (global or per segment)
+    assert (df.u2_a + df.u2_b == 2 * df.n_a * df.n_b).all()
+    assert ((df.auc_micro >= 0) & (df.auc_micro <= 1_000_000)).all()
+
+
+def _hashed_tfidf_laws(df, *_):
+    # the feature space is FIXED-WIDTH (the hashing trick's point) and
+    # idf actually differentiates
+    assert df.bucket.nunique() <= 256 and df.bucket_df.nunique() > 1
+
+
+def _span_suppress_laws(df, *_):
+    # partition law + non-vacuity: the corpus has exact dups, so shared
+    # 8-grams exist and something was cut
+    assert (df.n_tokens == df.cut_tokens + df.kept_tokens).all()
+    assert (df.cut_tokens >= 0).all() and (df.kept_tokens >= 0).all()
+    assert (df.cut_tokens > 0).any()
+
+
+def _theta_vocab_laws(df, *_):
+    from datalake_nba_dmc_spark.operators.dedup import _MERSENNE31
+    from datalake_nba_dmc_spark.suite.analytics import _KMV_K
+
+    # the theta-division estimator path is exercised AND sane
+    assert (df.theta < _MERSENNE31).any()
+    full = df[(df.n_kept == _KMV_K) & (df.exact_distinct >= _KMV_K)]
+    est = full.distinct_est_micro / 1e6
+    assert ((0.4 * full.exact_distinct <= est) & (est <= 2.5 * full.exact_distinct)).all()
+
+
+def _theta_overlap_laws(df, *_):
+    from datalake_nba_dmc_spark.suite.analytics import _KMV_K
+
+    # set algebra on every pair: common <= union <= 2k, inter <= union
+    assert ((0 <= df.n_common) & (df.n_common <= df.n_union)).all()
+    assert (df.n_union <= 2 * _KMV_K).all()
+    assert (df.inter_est_micro <= df.union_est_micro).all()
+
+
+def _theta_difference_laws(df, *_):
+    from datalake_nba_dmc_spark.suite.analytics import _KMV_K
+
+    # the ordered-pair grid is complete and n_a_only <= k on every row
+    g = df.source_a.nunique()
+    assert len(df) == g * (g - 1)
+    assert ((df.n_a_only >= 0) & (df.n_a_only <= _KMV_K)).all()
+
+
+def _cdc_reuse_laws(df, *_):
+    # unedited docs reuse EVERYTHING; edited docs reuse most of their
+    # chunks in aggregate (front edit, CDC re-syncs)
+    unedited, edited = df[df.edited == 0], df[df.edited == 1]
+    assert len(unedited) and (unedited.n_chunks == unedited.n_reused).all()
+    assert len(edited) and edited.n_reused.sum() >= 0.5 * edited.n_chunks.sum()
+
+
+def _exactsubstr_laws(df, spark, sf):
+    from pyspark.sql import functions as F
+
+    from datalake_nba_dmc_spark.operators.dedup import normalize_text
     from datalake_nba_dmc_spark.sources import TableRegistry
 
-    L = 64
-    docs = TableRegistry(spark, SF).documents
-    got = sorted(
-        (r.doc_id, r.seq_id, r.doc_offset, r.seq_offset, r.piece_len, r.n_tokens)
-        for r in pack_sequences(docs, seq_len=L).collect()
-    )
-    want = sorted(
-        tuple(int(v) for v in row)
-        for row in _duck().execute(
-            f"""
-        WITH toks AS (
-          SELECT doc_id,
-                 len(list_filter(string_split_regex(text, '\\s+'),
-                                 x -> x != '')) AS n
-          FROM documents WHERE text IS NOT NULL
-        ), nz AS (SELECT * FROM toks WHERE n > 0),
-        sp AS (
-          SELECT doc_id, n,
-                 CAST(SUM(n) OVER (ORDER BY doc_id
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND CURRENT ROW) AS BIGINT) AS e
-          FROM nz
-        ), spans AS (SELECT doc_id, n, e - n AS s, e FROM sp)
-        SELECT doc_id, q AS seq_id,
-               greatest(s, q * {L}) - s AS doc_offset,
-               greatest(s, q * {L}) - q * {L} AS seq_offset,
-               least(e, (q + 1) * {L}) - greatest(s, q * {L}) AS piece_len,
-               n AS n_tokens
-        FROM spans, UNNEST(range(s // {L}, (e - 1) // {L} + 1)) AS t(q)
-        """
-        ).fetchall()
-    )
-    assert got == want and len(got) > 0
+    # non-vacuous (the corpus HAS cross-doc duplication) and the
+    # partition law: masked tokens + removed == original tokens
+    assert (df.n_tokens_removed > 0).any()
+    docs = TableRegistry(spark, os.path.join(TESTDATA, sf)).documents
+    orig = {
+        r.doc_id: r.n
+        for r in docs.select(
+            "doc_id",
+            F.size(
+                F.filter(F.split(normalize_text("text"), " "), lambda t: t != "")
+            ).alias("n"),
+        ).collect()
+    }
+    for d, mt, c in df[["doc_id", "masked_text", "n_tokens_removed"]].itertuples(
+        index=False
+    ):
+        kept = len([t for t in (mt or "").split(" ") if t != ""])
+        assert kept + c == max(orig[d] or 0, 0)
+
+
+def _asof_within_laws(df, *_):
+    # the tolerance BITES both ways: some matches survive, some as-of
+    # matches were nulled as stale
+    assert 0 < df.asof_purchase_event_id.notna().sum() < len(df)
+
+
+def _quantiles_laws(df, spark, sf):
+    import math
+
+    assert len(df) == 25  # 5 segments x 5 probs
+    # brute force: every value IS the ceil(p*n/100)-th smallest (the
+    # check that caught the truncating-vs-floor ceiling trap: Spark
+    # `div` and DuckDB `//` truncate, so ceil must be (a+99) div 100)
+    segs: dict = {}
+    for s, v in _oracle_con(sf).execute(
+        "SELECT o_orderpriority, CAST(round(o_totalprice*100) AS BIGINT) "
+        "FROM orders WHERE o_totalprice IS NOT NULL "
+        "AND o_orderpriority IS NOT NULL"
+    ).fetchall():
+        segs.setdefault(s, []).append(v)
+    for vs in segs.values():
+        vs.sort()
+    for s, p, n, q in df[["o_orderpriority", "p_pct", "n", "q_scaled"]].itertuples(
+        index=False
+    ):
+        assert n == len(segs[s])
+        assert q == segs[s][math.ceil(p * n / 100) - 1], (s, p)
+    # quantiles are monotone in p within every segment
+    for _, g in df.sort_values("p_pct").groupby("o_orderpriority"):
+        assert g.q_scaled.is_monotonic_increasing
+
+
+def _int8_topk_laws(df, *_):
+    # ranks are 1..5 per query, scores non-increasing in rank, and the
+    # quantized ranking is informative (not all-equal scores)
+    assert len(df) == 8 * 5 and df.q_id.nunique() == 8
+    for _, g in df.sort_values("rank").groupby("q_id"):
+        assert list(g["rank"]) == [1, 2, 3, 4, 5]
+        assert g.score_micro.is_monotonic_decreasing
+    assert df.score_micro.nunique() > 1
+
+
+def _no_leakage(df, split="split"):
+    # every cluster lives in exactly one split
+    assert (df.groupby("cluster_id")[split].nunique() == 1).all()
+
+
+def _leakage_split_laws(df, *_):
+    _no_leakage(df)
+    # all three splits populated, train the large one (80/10/10 bands)
+    counts = df.split.value_counts()
+    assert set(counts.index) == {"train", "val", "test"}
+    assert counts["train"] > counts["val"] and counts["train"] > counts["test"]
+    # the guard BITES: a multi-doc cluster exists (the corpus has
+    # near-dups), and its members share a split by the law above
+    assert (df.cluster_id.value_counts() >= 2).any()
+
+
+def _psi_by_laws(df, *_):
+    # all 5 segments report, buckets in range, shares in (0, 1)
+    assert df.o_orderpriority.nunique() == 5
+    assert ((df.bucket >= 0) & (df.bucket <= 9)).all()
+    assert (df.n_a >= 0).all() and (df.n_b >= 0).all()
+    for c in ("share_a", "share_b"):
+        assert ((df[c] > 0.0) & (df[c] < 1.0)).all()
+
+
+def _eval_decon_laws(df, *_):
+    # the decontamination BITES: some train docs quarantined, some
+    # train docs survive clean
+    assert (df.final_split == "quarantine").any()
+    assert (df.final_split == "train").any()
+    # no surviving train doc shares a gram with the eval table
+    assert (df[df.final_split == "train"].n_eval_hits == 0).all()
+    # val/test assignments are untouched by decontamination
+    vt = df[df.split.isin(["val", "test"])]
+    assert (vt.split == vt.final_split).all()
+    # the intra-corpus law holds for the pre-quarantine split
+    _no_leakage(df)
+
+
+def _bootstrap_by_laws(df, *_):
+    # interval sanity per segment: lo <= hi, point inside a sane band
+    assert (df.n_resamples == 64).all() and (df.lo_micro <= df.hi_micro).all()
+    for pt, lo, hi in df[["point_micro", "lo_micro", "hi_micro"]].itertuples(
+        index=False
+    ):
+        assert lo <= pt <= hi or abs(pt - lo) < abs(pt) // 2
+
+
+def _trailing_multi_laws(df, *_):
+    # horizon nesting: the 24h window dominates the 1h window on every
+    # row, and both bite somewhere
+    assert (df.win_24h_count >= df.win_1h_count).all()
+    assert (df.win_24h_sum_scaled >= df.win_1h_sum_scaled).all()
+    assert (df.win_1h_count > 0).any()
+    assert (df.win_24h_count > df.win_1h_count).any()
+
+
+def _trailing_distinct_laws(df, *_):
+    # the distinct count BITES: some window holds >1 distinct item
+    assert (df.win_distinct > 1).any() and (df.win_distinct >= 0).all()
+
+
+def _stratified_split_laws(df, *_):
+    _no_leakage(df)
+    # the STRATIFICATION guarantee on the real corpus: doc-grain val/test
+    # proportions within half the largest cluster share (+1 doc) of the
+    # 10-pt targets
+    shares = df.split.value_counts()
+    assert set(shares.index) == {"train", "val", "test"}
+    n = len(df)
+    tol = 100.0 * (df.cluster_mass.max() / 2 + 1) / n
+    assert abs(100.0 * shares["val"] / n - 10.0) <= tol
+    assert abs(100.0 * shares["test"] / n - 10.0) <= tol
+
+
+def _drift_panel_laws(df, *_):
+    assert (df.n_a > 0).all() and (df.n_b > 0).all()
+    for c in ("ks_d_micro", "auc_micro"):
+        assert ((df[c] >= 0) & (df[c] <= 1_000_000)).all()
+    assert (df.psi_micro >= 0).all()
+    assert df.filter(like="_scaled").notna().all().all()
+
+
+#: The registered queries whose oracle a twin used to copy: (test name,
+#: registered query, scales, laws). A single scale makes a plain test; a
+#: tuple parametrizes it over ``sf``. Every entry runs
+#: check_registered_oracle — the registry is the only copy of each
+#: (builder, oracle) pair, and the laws keep the invariants the old twins
+#: asserted on top of the oracle.
+REGISTERED_TWINS = [
+    ("test_pack_sequences_duckdb_twin", "corpus_pack_sequences", "sf0.001", None),
+    ("test_containment_pairs_duckdb_twin", "mart_containment_pairs", "sf0.001", None),
+    ("test_bigram_logprob_duckdb_twin", "text_bigram_logprob", "sf0.001", None),
+    ("test_hll_portable_duckdb_twin", "sketch_hll_portable", "sf0.001", None),
+    (
+        "test_media_quarantine_report_duckdb_twin",
+        "media_quarantine_report",
+        "sf0.001",
+        _rows(2),
+    ),
+    ("test_c4_line_filters_duckdb_twin", "text_c4_filters", "sf0.001", _c4_laws),
+    (
+        "test_label_propagation_duckdb_twin",
+        "graph_label_propagation",
+        "sf0.001",
+        _rows(101, _label_propagation_laws),
+    ),
+    ("test_cms_counters_duckdb_twin", "sketch_cms_counters", "sf0.001", _cms_laws),
+    (
+        "test_triangle_count_duckdb_twin",
+        "graph_triangle_count",
+        "sf0.001",
+        _triangle_laws,
+    ),
+    (
+        "test_coreness_duckdb_twin",
+        "graph_coreness",
+        "sf0.001",
+        _rows(101, _coreness_laws),
+    ),
+    ("test_ks_drift_duckdb_twin", "stat_ks_drift", BOTH, _rows(1, _ks_laws)),
+    ("test_hashed_tfidf_duckdb_twin", "text_hashed_tfidf", BOTH, _hashed_tfidf_laws),
+    ("test_span_suppress_duckdb_twin", "dedup_span_suppress", BOTH, _span_suppress_laws),
+    ("test_kmv_theta_vocab_duckdb_twin", "sketch_theta_vocab", BOTH, _theta_vocab_laws),
+    (
+        "test_kmv_theta_overlap_duckdb_twin",
+        "sketch_theta_vocab_overlap",
+        BOTH,
+        _theta_overlap_laws,
+    ),
+    ("test_mann_whitney_duckdb_twin", "stat_mann_whitney", BOTH, _rows(1, _mw_laws)),
+    ("test_cdc_reuse_report_duckdb_twin", "dedup_cdc_reuse", BOTH, _cdc_reuse_laws),
+    (
+        "test_exactsubstr_pipeline_duckdb_twin",
+        "dedup_exactsubstr_pipeline",
+        BOTH,
+        _exactsubstr_laws,
+    ),
+    (
+        "test_ks_by_segment_duckdb_twin",
+        "stat_ks_drift_by_segment",
+        BOTH,
+        _rows(5, _ks_laws),
+    ),
+    (
+        "test_mw_by_segment_duckdb_twin",
+        "stat_mann_whitney_by_segment",
+        BOTH,
+        _rows(5, _mw_laws),
+    ),
+    (
+        "test_theta_difference_duckdb_twin",
+        "sketch_theta_vocab_difference",
+        BOTH,
+        _theta_difference_laws,
+    ),
+    (
+        "test_asof_within_duckdb_twin",
+        "events_asof_within_tolerance",
+        BOTH,
+        _asof_within_laws,
+    ),
+    (
+        "test_coreness_bucketed_duckdb_twin",
+        "graph_coreness_bucketed",
+        BOTH,
+        _rows(101),
+    ),
+    (
+        "test_exact_quantiles_by_duckdb_twin",
+        "stat_exact_quantiles_by_segment",
+        BOTH,
+        _quantiles_laws,
+    ),
+    ("test_int8_dot_topk_duckdb_twin", "sim_int8_dot_topk", BOTH, _int8_topk_laws),
+    (
+        "test_leakage_safe_split_duckdb_twin",
+        "sample_leakage_safe_split",
+        ("sf0.001", SF01_SLOW),
+        _leakage_split_laws,
+    ),
+    ("test_psi_by_segment_duckdb_twin", "stat_psi_by_segment", BOTH, _psi_by_laws),
+    (
+        "test_ivf_sq8_recall_duckdb_twin",
+        "sim_ivf_sq8_recall",
+        BOTH,
+        _rows(3),
+    ),
+    (
+        "test_eval_decontaminated_split_duckdb_twin",
+        "sample_eval_decontaminated_split",
+        ("sf0.001", SF01_SLOW),
+        _eval_decon_laws,
+    ),
+    (
+        "test_bootstrap_ci_by_segment_duckdb_twin",
+        "stat_bootstrap_ci_by_segment",
+        ("sf0.001", SF01_SLOW),
+        _rows(5, _bootstrap_by_laws),
+    ),
+    (
+        "test_trailing_windows_multi_duckdb_twin",
+        "events_trailing_windows_multi",
+        BOTH,
+        _trailing_multi_laws,
+    ),
+    (
+        "test_trailing_distinct_duckdb_twin",
+        "events_trailing_distinct_items",
+        BOTH,
+        _trailing_distinct_laws,
+    ),
+    (
+        "test_stratified_split_duckdb_twin",
+        "sample_stratified_split",
+        (pytest.param("sf0.001", marks=pytest.mark.slow), SF01_SLOW),
+        _stratified_split_laws,
+    ),
+    (
+        "test_drift_panel_duckdb_twin",
+        "stat_drift_panel_by_segment",
+        BOTH,
+        _rows(5, _drift_panel_laws),
+    ),
+]
+
+
+def _registered_twin(query: str, scales, laws):
+    if isinstance(scales, str):
+
+        def test(spark):
+            check_registered_oracle(spark, query, scales, laws)
+
+    else:
+
+        @pytest.mark.parametrize("sf", scales)
+        def test(spark, sf):
+            check_registered_oracle(spark, query, sf, laws)
+
+    return needs_testdata(test)
+
+
+for _test_name, *_twin in REGISTERED_TWINS:
+    globals()[_test_name] = _registered_twin(*_twin)
 
 
 @needs_testdata
@@ -99,7 +503,7 @@ def test_y4m_frame_stats_duckdb_twin(spark):
     )
     want = sorted(
         tuple(int(v) for v in row)
-        for row in _duck().execute(
+        for row in _oracle_con("sf0.001").execute(
             """
         WITH d AS (
           SELECT DISTINCT doc_id, encode(text) AS blob,
@@ -177,7 +581,7 @@ def test_pagerank_duckdb_twin(spark):
     )
     want = sorted(
         (int(a), int(b))
-        for a, b in _duck().execute(_pagerank_oracle(5, 85, SCALE)).fetchall()
+        for a, b in _oracle_con("sf0.001").execute(_pagerank_oracle(5, 85, SCALE)).fetchall()
     )
     assert got == want and len(got) > 0
 
@@ -203,7 +607,7 @@ def test_wav_pcm_stats_duckdb_twin(spark):
     )
     want = sorted(
         (int(a), int(b), int(c), round(float(d), 9), round(float(e), 6), int(f))
-        for a, b, c, d, e, f in _duck().execute(
+        for a, b, c, d, e, f in _oracle_con("sf0.001").execute(
             """
         WITH d AS (
           SELECT DISTINCT doc_id, encode(text) AS blob,
@@ -261,56 +665,6 @@ def test_staged_ops_empty_inputs(spark):
     assert synthesize_wav_media(degenerate).collect() == []
 
 
-@needs_testdata
-def test_containment_pairs_duckdb_twin(spark):
-    """containment_pairs vs the directed gram-join twin (the
-    dedup_ngram_jaccard oracle shape with the one-sided denominator)."""
-    from datalake_nba_dmc_spark.plans.curation import containment_pairs
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    docs = TableRegistry(spark, SF).documents
-    got = sorted(
-        (r.id_a, r.id_b, round(r.containment, 9))
-        for r in containment_pairs(docs, threshold=0.8).collect()
-    )
-    want = sorted(
-        (int(a), int(b), round(float(c), 9))
-        for a, b, c in _duck().execute(
-            r"""
-        WITH toks_t AS (
-          SELECT doc_id,
-                 list_filter(string_split(
-                   regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '),
-                   x -> x != '') AS toks
-          FROM documents
-        ), sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(toks) >= 3
-                      THEN list_distinct([toks[i] || ' ' || toks[i+1] || ' '
-                                          || toks[i+2]
-                                          FOR i IN range(1, len(toks) - 1)])
-                      ELSE [array_to_string(toks, ' ')] END AS grams
-          FROM toks_t
-        ), sizes AS (
-          SELECT doc_id, len(grams) AS sz FROM sh
-        ), exploded AS (
-          SELECT doc_id, unnest(grams) AS gram FROM sh
-        ), inter AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-          FROM exploded a JOIN exploded b
-            ON a.gram = b.gram AND a.doc_id != b.doc_id
-          GROUP BY 1, 2
-        )
-        SELECT i.id_a, i.id_b,
-               CAST(i.n_inter AS DOUBLE) / sa.sz AS containment
-        FROM inter i JOIN sizes sa ON i.id_a = sa.doc_id
-        WHERE CAST(i.n_inter AS DOUBLE) / sa.sz >= 0.8
-        """
-        ).fetchall()
-    )
-    assert got == want and len(got) > 0
-
-
 def _harmonic_oracle(k: int, scale: int) -> str:
     """Unrolled-BFS harmonic-centrality twin: round r discovers pairs via
     an ANTI JOIN against everything known — first discovery = min hops."""
@@ -363,64 +717,7 @@ def test_harmonic_centrality_duckdb_twin(spark):
     )
     want = sorted(
         (int(a), int(b))
-        for a, b in _duck().execute(_harmonic_oracle(4, SCALE)).fetchall()
-    )
-    assert got == want and len(got) > 0
-
-
-@needs_testdata
-def test_bigram_logprob_duckdb_twin(spark):
-    """bigram_logprob (r10-staged) vs an independently formulated DuckDB
-    twin: bigrams via a list comprehension over the token array, the same
-    add-one model tables, and the same exact integer micro-nat terms —
-    value-identical including the 6-dp rounded average."""
-    from datalake_nba_dmc_spark.operators.ngram_lm import bigram_logprob
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    docs = TableRegistry(spark, SF).documents
-    got = sorted(
-        (r.doc_id, r.n_bigrams, r.sum_logprob_micro)
-        for r in bigram_logprob(docs).collect()
-    )
-    want = sorted(
-        (int(a), int(b), int(c))
-        for a, b, c in _duck().execute(
-            r"""
-        WITH t AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(lower(text), '\s+'),
-                             x -> x != '') AS toks
-          FROM documents
-        ), uni AS (
-          SELECT COUNT(DISTINCT w) AS v
-          FROM (SELECT unnest(toks) AS w FROM t)
-        ), t2 AS (
-          SELECT doc_id, toks FROM t WHERE len(toks) >= 2
-        ), bi AS (
-          SELECT doc_id,
-                 unnest([{'w1': toks[i], 'w2': toks[i+1]}
-                         FOR i IN range(1, len(toks))]) AS p
-          FROM t2
-        ), pairs AS (
-          SELECT doc_id, p.w1 AS w1, p.w2 AS w2 FROM bi
-        ), dbb AS (
-          SELECT doc_id, w1, w2, COUNT(*) AS n_dbb FROM pairs GROUP BY 1, 2, 3
-        ), big AS (
-          SELECT w1, w2, CAST(SUM(n_dbb) AS BIGINT) AS c_ww
-          FROM dbb GROUP BY 1, 2
-        ), ctx AS (
-          SELECT w1, CAST(SUM(c_ww) AS BIGINT) AS c_w1 FROM big GROUP BY 1
-        )
-        SELECT dbb.doc_id,
-               CAST(SUM(dbb.n_dbb) AS BIGINT) AS n_bigrams,
-               CAST(SUM(dbb.n_dbb * CAST(round(
-                      ln(CAST(big.c_ww + 1 AS DOUBLE)
-                         / CAST(ctx.c_w1 + uni.v AS DOUBLE))
-                      * 1e6) AS BIGINT)) AS BIGINT) AS sum_logprob_micro
-        FROM dbb JOIN big USING (w1, w2) JOIN ctx USING (w1) CROSS JOIN uni
-        GROUP BY dbb.doc_id
-        """
-        ).fetchall()
+        for a, b in _oracle_con("sf0.001").execute(_harmonic_oracle(4, SCALE)).fetchall()
     )
     assert got == want and len(got) > 0
 
@@ -491,222 +788,9 @@ def test_hyperball_registers_duckdb_twin(spark):
     GROUP BY s.node, t.j"""
     )
     want = sorted(
-        (int(a), int(b), int(c)) for a, b, c in _duck().execute(sql).fetchall()
+        (int(a), int(b), int(c)) for a, b, c in _oracle_con("sf0.001").execute(sql).fetchall()
     )
     assert got == want and len(got) == 101 * m
-
-
-@needs_testdata
-def test_hll_portable_duckdb_twin(spark):
-    """hll_portable_distinct (r10-staged) vs DuckDB evaluating the SAME
-    dialect-rendered register aggregates and the SAME literal-embedded
-    estimate — the sketch VALUE hash-matches, not just a tolerance
-    certificate (the gap the engine-private DataSketches blobs can't
-    close)."""
-    from datalake_nba_dmc_spark.operators.hll_portable import (
-        M_REGISTERS,
-        estimate_sql,
-        hll_portable_distinct,
-        register_agg_sql,
-    )
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    docs = TableRegistry(spark, SF).documents
-    got = sorted(
-        (r.source, r.distinct_est_micro)
-        for r in hll_portable_distinct(docs, ["source"], "doc_id").collect()
-    )
-    m = M_REGISTERS
-    regs = [f"_r{j}" for j in range(m)]
-    reg_select = ", ".join(
-        f"{register_agg_sql('doc_id', j, 'duck', m)} AS {r}"
-        for j, r in enumerate(regs)
-    )
-    want = sorted(
-        (a, int(b))
-        for a, b in _duck().execute(
-            f"""
-        WITH regs AS (
-          SELECT source, {reg_select} FROM documents GROUP BY source
-        )
-        SELECT source, {estimate_sql(regs, m)} AS distinct_est_micro
-        FROM regs
-        """
-        ).fetchall()
-    )
-    assert got == want and len(got) > 0
-
-
-@needs_testdata
-def test_media_quarantine_report_duckdb_twin(spark):
-    """media_quarantine_report (r10-staged) over a deterministically
-    corrupted PNG corpus (every 7th payload truncated to 40 bytes —
-    magic intact, decode impossible) vs the counts DuckDB derives from
-    the corruption rule alone: the ledger's per-(format, status) totals
-    hash-match, certifying both the sniff and the decode verdicts."""
-    from pyspark.sql import functions as F
-
-    from datalake_nba_dmc_spark.operators.multimodal import (
-        media_quarantine_report,
-        synthesize_png_media,
-    )
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    docs = TableRegistry(spark, SF).documents
-    media = synthesize_png_media(docs, width=16, cap=1024)
-    corrupted = media.withColumn(
-        "payload",
-        F.when(
-            F.col("media_id") % 7 == 0, F.expr("substring(payload, 1, 40)")
-        ).otherwise(F.col("payload")),
-    )
-    got = sorted(
-        (r.sniffed_format, r.status, r.n)
-        for r in media_quarantine_report(corrupted).collect()
-    )
-    want = sorted(
-        (a, b, int(c))
-        for a, b, c in _duck().execute(
-            """
-        SELECT 'png' AS sniffed_format,
-               CASE WHEN doc_id % 7 = 0 THEN 'quarantined' ELSE 'ok' END
-                 AS status,
-               COUNT(*) AS n
-        FROM documents
-        WHERE text IS NOT NULL AND length(text) > 0
-        GROUP BY 1, 2
-        """
-        ).fetchall()
-    )
-    assert got == want and len(got) == 2
-
-
-@needs_testdata
-def test_c4_line_filters_duckdb_twin(spark):
-    """c4_line_filters (r11-staged) vs a DuckDB list_filter replay of the
-    same line rules — terminal punctuation, >=5 words, no 'javascript',
-    page-level lorem/brace/3-kept-lines discards — value-identical per
-    document including the kept-character totals."""
-    from datalake_nba_dmc_spark.operators.text import c4_line_filters
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    docs = TableRegistry(spark, SF).documents
-    got = sorted(
-        (
-            r.doc_id,
-            r.n_lines,
-            r.n_kept_lines,
-            r.kept_chars,
-            r.has_lorem,
-            r.has_brace,
-            r.c4_keep,
-        )
-        for r in c4_line_filters(docs)
-        .select(
-            "doc_id",
-            "n_lines",
-            "n_kept_lines",
-            "kept_chars",
-            "has_lorem",
-            "has_brace",
-            "c4_keep",
-        )
-        .collect()
-    )
-    want = sorted(
-        tuple(int(x) for x in row)
-        for row in _duck().execute(
-            r"""
-        WITH t AS (
-          SELECT doc_id, text,
-                 list_filter(list_transform(string_split(text, chr(10)),
-                             x -> trim(x)), x -> x != '') AS lines
-          FROM documents
-        ), k AS (
-          SELECT doc_id, text, lines,
-                 list_filter(lines, l ->
-                     regexp_matches(l, '[.!?"]$')
-                     AND len(list_filter(string_split_regex(l, '\s+'),
-                                         w -> w != '')) >= 5
-                     AND NOT contains(lower(l), 'javascript')) AS kept
-          FROM t
-        )
-        SELECT doc_id,
-               CAST(len(lines) AS BIGINT) AS n_lines,
-               CAST(len(kept) AS BIGINT) AS n_kept_lines,
-               CAST(COALESCE(list_sum(list_transform(kept, x -> length(x))),
-                             0) AS BIGINT) AS kept_chars,
-               CASE WHEN contains(lower(text), 'lorem ipsum') THEN 1 ELSE 0
-                 END AS has_lorem,
-               CASE WHEN contains(text, '{') THEN 1 ELSE 0 END AS has_brace,
-               CASE WHEN len(kept) >= 3
-                         AND NOT contains(lower(text), 'lorem ipsum')
-                         AND NOT contains(text, '{')
-                    THEN 1 ELSE 0 END AS c4_keep
-        FROM k
-        """
-        ).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # the rules actually bite on the synthetic corpus (not a vacuous twin)
-    assert any(r[6] == 0 for r in got) or any(r[2] < r[1] for r in got)
-
-
-@needs_testdata
-def test_label_propagation_duckdb_twin(spark):
-    """label_propagation_micro (r11-staged) vs a DuckDB twin unrolling k
-    synchronous plurality-vote rounds (ROW_NUMBER ordered by count DESC,
-    label ASC = the operator's max-by-(count, -label) aggregate) — every
-    community label bit-exact."""
-    from pyspark.sql import functions as F
-
-    from datalake_nba_dmc_spark.operators.graph import (
-        label_propagation_micro,
-    )
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    T = 4
-    docs = TableRegistry(spark, SF).documents
-    edges = docs.select(
-        (F.col("doc_id") % 101).alias("src"),
-        (F.expr("doc_id div 101") % 101).alias("dst"),
-    ).filter(F.col("src") != F.col("dst"))
-    got = sorted(
-        (r.node, r.community)
-        for r in label_propagation_micro(edges, n_rounds=T).collect()
-    )
-    ctes = [
-        "edges AS (SELECT DISTINCT doc_id % 101 AS s, (doc_id // 101) % 101 "
-        "AS d FROM documents WHERE doc_id % 101 != (doc_id // 101) % 101)",
-        "und AS (SELECT DISTINCT u, v FROM (SELECT s AS u, d AS v FROM edges "
-        "UNION ALL SELECT d, s FROM edges))",
-        "l0 AS (SELECT DISTINCT u AS node, u AS label FROM und)",
-    ]
-    for t in range(1, T + 1):
-        ctes.append(
-            f"v{t} AS (SELECT und.u AS node, l.label FROM und "
-            f"JOIN l{t - 1} l ON und.v = l.node)"
-        )
-        ctes.append(
-            f"c{t} AS (SELECT node, label, COUNT(*) AS c FROM v{t} "
-            "GROUP BY 1, 2)"
-        )
-        ctes.append(
-            f"l{t} AS (SELECT node, label FROM (SELECT node, label, "
-            "ROW_NUMBER() OVER (PARTITION BY node ORDER BY c DESC, label ASC)"
-            f" AS rn FROM c{t}) WHERE rn = 1)"
-        )
-    sql = (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT node, label AS community FROM l{T}"
-    )
-    want = sorted(
-        (int(a), int(b)) for a, b in _duck().execute(sql).fetchall()
-    )
-    assert got == want and len(got) == 101
-    # communities actually coarsen (not the identity labeling)
-    assert len({c for _, c in got}) < 101
 
 
 def test_label_propagation_empty_and_laws(spark):
@@ -801,7 +885,7 @@ def test_cdc_chunks_duckdb_twin(spark):
     FROM spans
     """
     want = sorted(
-        tuple(int(x) for x in row) for row in _duck().execute(sql).fetchall()
+        tuple(int(x) for x in row) for row in _oracle_con("sf0.001").execute(sql).fetchall()
     )
     assert got == want and len(got) > 0
     # CDC actually splits (some doc has >1 chunk) and the divisor rule
@@ -1019,7 +1103,7 @@ def test_minhash_portable_duckdb_twin(spark):
     """
     want = sorted(
         (int(a), int(b), int(c))
-        for a, b, c in _duck().execute(sql).fetchall()
+        for a, b, c in _oracle_con("sf0.001").execute(sql).fetchall()
     )
     assert got == want and len(got) > 0
     # true duplicates share full signatures: the corpus has exact dups
@@ -1080,7 +1164,7 @@ def test_simhash_portable_duckdb_twin(spark):
     SELECT doc_id, CAST({sig} AS BIGINT) AS simhash FROM sums
     """
     want = sorted(
-        (int(a), int(b)) for a, b in _duck().execute(sql).fetchall()
+        (int(a), int(b)) for a, b in _oracle_con("sf0.001").execute(sql).fetchall()
     )
     assert got == want and len(got) > 0
     # exact duplicates collapse to identical signatures (collision law)
@@ -1091,10 +1175,24 @@ def test_simhash_portable_duckdb_twin(spark):
 
 
 def test_r12_staged_ops_empty_and_degenerate_inputs(spark):
-    """Empty/degenerate-input laws for the five r12-staged operators
-    (pre-empting the empty + nulls audits they will face once
-    registered): empty in → empty out, NULL / non-ASCII / token-less
-    text filtered in-band, never a crash."""
+    """Empty/degenerate-input laws for five operators (pre-empting the
+    empty + nulls audits): empty in → empty out, NULL / non-ASCII /
+    token-less text filtered in-band, never a crash. Runs with Spark's
+    default optimizer rules: the registry builders exclude
+    InferFiltersFromGenerate on the shared session, and that exclusion
+    used to hide a crash of the minhash shingle fold on token-less text
+    (the inferred filter evaluates the fold before the size filter)."""
+    rules = "spark.sql.optimizer.excludedRules"
+    old = spark.conf.get(rules, None)
+    spark.conf.unset(rules)
+    try:
+        _empty_and_degenerate_inputs(spark)
+    finally:
+        if old is not None:
+            spark.conf.set(rules, old)
+
+
+def _empty_and_degenerate_inputs(spark):
     from datalake_nba_dmc_spark.operators.cdc import cdc_chunks
     from datalake_nba_dmc_spark.operators.graph import (
         label_propagation_micro,
@@ -1128,12 +1226,13 @@ def test_r12_staged_ops_empty_and_degenerate_inputs(spark):
 
 @needs_testdata
 def test_connected_components_duckdb_twin(spark):
-    """connected_components_star AND connected_components (r11-staged
-    registration graph_connected_components) vs a DuckDB recursive-CTE
-    twin: reach = transitive (node, reachable-id) closure over the
-    undirected derived link graph, component = MIN reachable id — an
-    exact fixpoint formulation, structurally independent of both Spark
-    loops (which never materialize the closure)."""
+    """connected_components_star (the graph_connected_components builder)
+    AND the label-propagation connected_components both match the
+    registered recursive-CTE oracle: reach = transitive (node,
+    reachable-id) closure over the undirected derived link graph,
+    component = MIN reachable id — an exact fixpoint formulation,
+    structurally independent of both Spark loops (which never
+    materialize the closure)."""
     from pyspark.sql import functions as F
 
     from datalake_nba_dmc_spark.operators.dedup import (
@@ -1141,6 +1240,7 @@ def test_connected_components_duckdb_twin(spark):
         connected_components_star,
     )
     from datalake_nba_dmc_spark.sources import TableRegistry
+    from datalake_nba_dmc_spark.suite import load_all
 
     docs = TableRegistry(spark, SF).documents
     edges = docs.select(
@@ -1149,23 +1249,8 @@ def test_connected_components_duckdb_twin(spark):
     ).filter(F.col("src") != F.col("dst"))
     want = sorted(
         (int(a), int(b))
-        for a, b in _duck()
-        .execute(
-            """
-        WITH RECURSIVE edges AS (
-          SELECT DISTINCT doc_id % 101 AS s, (doc_id // 101) % 101 AS d
-          FROM documents WHERE doc_id % 101 != (doc_id // 101) % 101
-        ), und AS (
-          SELECT s AS u, d AS v FROM edges
-          UNION SELECT d, s FROM edges
-        ), reach(node, r) AS (
-          SELECT u, u FROM (SELECT DISTINCT u FROM und)
-          UNION
-          SELECT und.u, reach.r FROM und JOIN reach ON und.v = reach.node
-        )
-        SELECT node, MIN(r) AS comp FROM reach GROUP BY node
-        """
-        )
+        for a, b in _oracle_con("sf0.001")
+        .execute(load_all()["graph_connected_components"].oracle)
         .fetchall()
     )
     for impl in (connected_components_star, connected_components):
@@ -1176,64 +1261,6 @@ def test_connected_components_duckdb_twin(spark):
         assert got == want and len(got) > 0
     # the graph actually merges (components < nodes, not the identity)
     assert len({c for _, c in want}) < len(want)
-
-
-@needs_testdata
-def test_cms_counters_duckdb_twin(spark):
-    """cms_counters (r11-staged registration sketch_cms_counters) vs a
-    DuckDB twin replaying the same tokenization, mixer token hash, and
-    literal-embedded affine row hashes — the full d×w counter matrix
-    bit-exact."""
-    from datalake_nba_dmc_spark.operators.cdc import token_hash_sql
-    from datalake_nba_dmc_spark.operators.dedup import _MERSENNE31
-    from datalake_nba_dmc_spark.operators.portable_sketch import (
-        cms_counters,
-        permutation_coeffs,
-    )
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    D, W = 4, 64
-    docs = TableRegistry(spark, SF).documents
-    got = sorted(
-        (r.row_idx, r.col_idx, r.cnt)
-        for r in cms_counters(docs, depth=D, width=W).collect()
-    )
-    th = token_hash_sql("tok", "duck")
-    expanded = " UNION ALL ".join(
-        f"SELECT {i} AS row_idx, "
-        f"(((h % {_MERSENNE31}) * {a} + {b}) % {_MERSENNE31}) % {W} "
-        "AS col_idx FROM hashed"
-        for i, (a, b) in enumerate(permutation_coeffs(D))
-    )
-    sql = rf"""
-    WITH t AS (
-      SELECT list_filter(string_split(
-               regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '),
-               x -> x != '') AS toks
-      FROM documents
-      WHERE text IS NOT NULL
-        AND octet_length(encode(text)) = length(text)
-    ), t2 AS (
-      SELECT unnest(toks) AS tok FROM t
-    ), hashed AS (
-      SELECT ({th}) AS h FROM t2
-    ), expanded AS ({expanded})
-    SELECT row_idx, col_idx, CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM expanded GROUP BY 1, 2
-    """
-    want = sorted(
-        (int(a), int(b), int(c))
-        for a, b, c in _duck().execute(sql).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # group count is bounded by d*w however large the corpus (the 100 TB
-    # frequency-sketch property), and mass is conserved: every token
-    # occurrence lands exactly once per row, so all d row-sums are equal
-    assert len(got) <= D * W
-    row_mass = {}
-    for ri, _, c in got:
-        row_mass[ri] = row_mass.get(ri, 0) + c
-    assert len(row_mass) == D and len(set(row_mass.values())) == 1
 
 
 @needs_testdata
@@ -1300,68 +1327,12 @@ def test_cms_heavy_hitters_duckdb_twin(spark):
     GROUP BY p.tok, p.true_cnt
     """
     want = sorted(
-        (a, int(b), int(c)) for a, b, c in _duck().execute(sql).fetchall()
+        (a, int(b), int(c)) for a, b, c in _oracle_con("sf0.001").execute(sql).fetchall()
     )
     assert got == want and len(got) == K
     # overestimate-only law, and non-vacuous (see width note above)
     assert all(e >= t for _, t, e in got)
     assert any(e > t for _, t, e in got)
-
-
-@needs_testdata
-def test_triangle_count_duckdb_twin(spark):
-    """triangle_count (r11-staged registration graph_triangle_count) vs
-    a DuckDB twin counting ordered i<j<k closed triples by a triple
-    join — structurally independent of the degree-oriented wedge plan
-    (which never materializes unordered triples)."""
-    from pyspark.sql import functions as F
-
-    from datalake_nba_dmc_spark.operators.graph import triangle_count
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    docs = TableRegistry(spark, SF).documents
-    edges = docs.select(
-        (F.col("doc_id") % 101).alias("src"),
-        (F.expr("doc_id div 101") % 101).alias("dst"),
-    ).filter(F.col("src") != F.col("dst"))
-    got = sorted(
-        (r.node, r.degree, r.triangles)
-        for r in triangle_count(edges).collect()
-    )
-    want = sorted(
-        (int(a), int(b), int(c))
-        for a, b, c in _duck()
-        .execute(
-            """
-        WITH e AS (
-          SELECT DISTINCT least(doc_id % 101, (doc_id // 101) % 101) AS a,
-                 greatest(doc_id % 101, (doc_id // 101) % 101) AS b
-          FROM documents WHERE doc_id % 101 != (doc_id // 101) % 101
-        ), und AS (
-          SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e
-        ), deg AS (
-          SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS degree
-          FROM und GROUP BY u
-        ), tri AS (
-          SELECT e1.a AS i, e1.b AS j, e2.b AS k
-          FROM e e1 JOIN e e2 ON e2.a = e1.b
-          JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-        ), pn AS (
-          SELECT node, CAST(COUNT(*) AS BIGINT) AS triangles FROM (
-            SELECT i AS node FROM tri
-            UNION ALL SELECT j FROM tri
-            UNION ALL SELECT k FROM tri
-          ) GROUP BY node
-        )
-        SELECT deg.node, deg.degree, COALESCE(pn.triangles, 0) AS triangles
-        FROM deg LEFT JOIN pn USING (node)
-        """
-        )
-        .fetchall()
-    )
-    assert got == want and len(got) > 0
-    # the derived graph actually closes triangles (non-vacuous twin)
-    assert any(t > 0 for _, _, t in want)
 
 
 @needs_testdata
@@ -1483,10 +1454,7 @@ def test_bootstrap_ci_duckdb_twin(spark):
     w = bootstrap_weight_sql("id", "r", SEED, "duck")
     lo_rank = max(1, -(-M * ALPHA // 200))
     hi_rank = max(1, -(-M * (200 - ALPHA) // 200))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM '{os.path.join(SF, 'orders.parquet')}'"
-    )
+    con = _oracle_con("sf0.001")
     want = [
         tuple(int(v) for v in row)
         for row in con.execute(
@@ -1620,7 +1588,7 @@ def test_minhash_portable_clusters_duckdb_twin(spark):
     """
     want = sorted(
         (int(a), int(b), bool(c))
-        for a, b, c in _duck().execute(sql).fetchall()
+        for a, b, c in _oracle_con("sf0.001").execute(sql).fetchall()
     )
     assert got == want and len(got) > 0
     # the pipeline actually merges documents (exact dups exist in the
@@ -1628,58 +1596,6 @@ def test_minhash_portable_clusters_duckdb_twin(spark):
     assert any(not rep for _, _, rep in got)
     reps = {c for _, c, rep in got if rep}
     assert reps == {c for _, c, _ in got}
-
-
-@needs_testdata
-def test_coreness_duckdb_twin(spark):
-    """coreness_micro (r11-staged registration graph_coreness) vs a
-    DuckDB twin unrolling the same synchronous h-index rounds
-    (ROW_NUMBER ranked by value desc, max(least(rank, value)) per node)
-    — every coreness value bit-exact."""
-    from pyspark.sql import functions as F
-
-    from datalake_nba_dmc_spark.operators.graph import coreness_micro
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    T = 8
-    docs = TableRegistry(spark, SF).documents
-    edges = docs.select(
-        (F.col("doc_id") % 101).alias("src"),
-        (F.expr("doc_id div 101") % 101).alias("dst"),
-    ).filter(F.col("src") != F.col("dst"))
-    got = sorted(
-        (r.node, r.coreness)
-        for r in coreness_micro(edges, n_rounds=T).collect()
-    )
-    ctes = [
-        "edges AS (SELECT DISTINCT doc_id % 101 AS s, (doc_id // 101) % 101 "
-        "AS d FROM documents WHERE doc_id % 101 != (doc_id // 101) % 101)",
-        "und AS (SELECT DISTINCT u, v FROM (SELECT s AS u, d AS v FROM edges "
-        "UNION ALL SELECT d, s FROM edges))",
-        "l0 AS (SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS c "
-        "FROM und GROUP BY u)",
-    ]
-    for t in range(1, T + 1):
-        ctes.append(
-            f"v{t} AS (SELECT und.u AS nbr_of, l.node, l.c FROM und "
-            f"JOIN l{t - 1} l ON und.v = l.node)"
-        )
-        ctes.append(
-            f"l{t} AS (SELECT nbr_of AS node, "
-            "CAST(MAX(LEAST(rn, c)) AS BIGINT) AS c FROM ("
-            "SELECT nbr_of, c, ROW_NUMBER() OVER (PARTITION BY nbr_of "
-            f"ORDER BY c DESC, node ASC) AS rn FROM v{t}) GROUP BY nbr_of)"
-        )
-    sql = (
-        "WITH " + ",\n".join(ctes)
-        + f"\nSELECT node, c AS coreness FROM l{T}"
-    )
-    want = sorted(
-        (int(a), int(b)) for a, b in _duck().execute(sql).fetchall()
-    )
-    assert got == want and len(got) == 101
-    # the graph is not coreness-uniform (non-vacuous)
-    assert len({c for _, c in want}) > 1
 
 
 @needs_testdata
@@ -1773,232 +1689,8 @@ def test_coreness_converged_at_registered_rounds(spark):
     ) == sorted(tuple(r) for r in coreness_micro(edges, 16).collect())
 
 
-# --- r12-staged slate (registers r13): KS drift, hashed TF-IDF, span
-# suppression. Each twin runs at BOTH gate scales (the two-scale bar).
-
-_KS_ORACLE = """
-WITH base AS (
-  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS xs,
-         CASE WHEN o_orderdate < DATE '1998-01-01' THEN 1 ELSE 0 END AS ia
-  FROM orders WHERE o_totalprice IS NOT NULL AND o_orderdate IS NOT NULL
-), g AS (
-  SELECT xs, CAST(SUM(ia) AS BIGINT) AS ca,
-         CAST(SUM(1 - ia) AS BIGINT) AS cb
-  FROM base GROUP BY xs
-), c AS (
-  SELECT xs,
-         CAST(SUM(ca) OVER (ORDER BY xs ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS cum_a,
-         CAST(SUM(cb) OVER (ORDER BY xs ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS cum_b
-  FROM g
-), n AS (
-  SELECT CAST(SUM(ia) AS BIGINT) AS n_a,
-         CAST(COUNT(*) - SUM(ia) AS BIGINT) AS n_b
-  FROM base
-)
-SELECT n.n_a, n.n_b,
-       CAST(MAX(ABS(c.cum_a * n.n_b - c.cum_b * n.n_a)) AS BIGINT) AS ks_num,
-       CAST(MAX(ABS(c.cum_a * n.n_b - c.cum_b * n.n_a)) * 1000000
-            // GREATEST(n.n_a * n.n_b, 1) AS BIGINT) AS ks_d_micro
-FROM c CROSS JOIN n
-GROUP BY n.n_a, n.n_b
-HAVING COUNT(*) > 0
-"""
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_ks_drift_duckdb_twin(spark, sf):
-    """ks_two_sample (r12-staged, registers r13 as stat_ks_drift) vs a
-    DuckDB twin using the SEQUENTIAL formulation (one unpartitioned
-    running-sum window over the value grid) — structurally independent
-    of the operator's two-phase parallel prefix sum; every integer
-    (including the cross-multiplied sup-norm numerator) bit-exact."""
-    import duckdb as _duckdb
-
-    from pyspark.sql import functions as F
-
-    from datalake_nba_dmc_spark.operators.stats import ks_two_sample
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    orders = TableRegistry(spark, sfd).orders
-    got = [
-        tuple(r)
-        for r in ks_two_sample(
-            orders,
-            "o_totalprice",
-            F.col("o_orderdate") < F.lit("1998-01-01").cast("date"),
-        ).collect()
-    ]
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM '{os.path.join(sfd, 'orders.parquet')}'"
-    )
-    want = [
-        tuple(int(v) for v in row)
-        for row in con.execute(_KS_ORACLE).fetchall()
-    ]
-    assert got == want and len(got) == 1
-    n_a, n_b, ks_num, ks_micro = got[0]
-    assert 0 <= ks_micro <= 1_000_000 and ks_num <= n_a * n_b
-    # drift actually measured (non-vacuous): both cohorts populated
-    assert n_a > 0 and n_b > 0
-
-
-def _hashed_tfidf_oracle(num_buckets: int) -> str:
-    from datalake_nba_dmc_spark.operators.cdc import token_hash_sql
-
-    th = token_hash_sql("tok", "duck")
-    return rf"""
-    WITH t AS (
-      SELECT doc_id,
-             list_filter(string_split(
-               regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '),
-               x -> x != '') AS toks
-      FROM documents
-      WHERE text IS NOT NULL
-        AND octet_length(encode(text)) = length(text)
-    ), t2 AS (
-      SELECT doc_id, unnest(toks) AS tok FROM t
-    ), pb AS (
-      SELECT doc_id, ({th}) % {num_buckets} AS bucket,
-             CAST(COUNT(*) AS BIGINT) AS tf
-      FROM t2 GROUP BY 1, 2
-    ), idf AS (
-      SELECT bucket, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS bucket_df
-      FROM pb GROUP BY bucket
-    ), n AS (
-      SELECT COUNT(DISTINCT doc_id) AS nd FROM pb
-    )
-    SELECT pb.doc_id, pb.bucket, pb.tf, idf.bucket_df,
-           CAST(pb.tf * CAST(round(ln(CAST(nd + 1 AS DOUBLE)
-                / CAST(bucket_df + 1 AS DOUBLE)) * 1000000.0) AS BIGINT)
-                AS BIGINT) AS tfidf_micro
-    FROM pb JOIN idf USING (bucket) CROSS JOIN n
-    """
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_hashed_tfidf_duckdb_twin(spark, sf):
-    """hashed_tfidf (r12-staged, registers r13 as text_hashed_tfidf) vs
-    a DuckDB twin replaying the same mixer bucket fold and the same
-    integer micro-nat IDF — every value bit-exact (the bigram_logprob
-    contract; no float column anywhere)."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.operators.text import hashed_tfidf
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    docs = TableRegistry(spark, sfd).documents
-    got = sorted(
-        (r.doc_id, r.bucket, r.tf, r.bucket_df, r.tfidf_micro)
-        for r in hashed_tfidf(docs).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{os.path.join(sfd, 'documents.parquet')}'"
-    )
-    want = sorted(
-        tuple(int(v) for v in row)
-        for row in con.execute(_hashed_tfidf_oracle(256)).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # the feature space is actually FIXED-WIDTH (the hashing trick's
-    # whole point): distinct buckets bounded by 256 however many tokens
-    assert len({b for _, b, _, _, _ in got}) <= 256
-    # and idf actually differentiates (not all buckets equally common)
-    assert len({d for _, _, _, d, _ in got}) > 1
-
-
-_SUPPRESS_ORACLE = r"""
-WITH toks_t AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'),
-                     x -> x != '') AS toks
-  FROM documents WHERE text IS NOT NULL
-), wins AS (
-  SELECT doc_id, i - 1 AS pos,
-         array_to_string(toks[i : i + 7], ' ') AS w
-  FROM toks_t, LATERAL unnest(range(1, len(toks) - 6)) AS t(i)
-  WHERE len(toks) >= 8
-), shared AS (
-  SELECT w FROM wins GROUP BY w HAVING COUNT(DISTINCT doc_id) >= 2
-), occ AS (
-  SELECT doc_id, pos FROM wins WHERE w IN (SELECT w FROM shared)
-), flagged AS (
-  SELECT doc_id, pos,
-         CASE WHEN pos > coalesce(max(pos + 8) OVER (
-                PARTITION BY doc_id ORDER BY pos
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-              THEN 1 ELSE 0 END AS is_new
-  FROM occ
-), sp AS (
-  SELECT doc_id, pos,
-         sum(is_new) OVER (PARTITION BY doc_id ORDER BY pos
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS span_id
-  FROM flagged
-), spans AS (
-  SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e
-  FROM sp GROUP BY doc_id, span_id
-), cut AS (
-  SELECT doc_id, CAST(SUM(e - s) AS BIGINT) AS cut_tokens
-  FROM spans GROUP BY doc_id
-), counts AS (
-  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens
-  FROM toks_t WHERE len(toks) > 0
-)
-SELECT c.doc_id, c.n_tokens,
-       COALESCE(cut.cut_tokens, 0) AS cut_tokens,
-       c.n_tokens - COALESCE(cut.cut_tokens, 0) AS kept_tokens
-FROM counts c LEFT JOIN cut ON c.doc_id = cut.doc_id
-"""
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_span_suppress_duckdb_twin(spark, sf):
-    """substring_span_suppress (r12-staged, registers r13 as
-    dedup_span_suppress) vs a DuckDB twin re-deriving the cut list from
-    window STRINGS (the dedup_substring_spans oracle chain) and the
-    same per-doc coverage arithmetic — bit-exact, and the kept+cut
-    partition law holds on every row."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.operators.dedup import (
-        substring_span_suppress,
-    )
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    docs = TableRegistry(spark, sfd).documents
-    got = sorted(
-        (r.doc_id, r.n_tokens, r.cut_tokens, r.kept_tokens)
-        for r in substring_span_suppress(docs).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{os.path.join(sfd, 'documents.parquet')}'"
-    )
-    want = sorted(
-        tuple(int(v) for v in row)
-        for row in con.execute(_SUPPRESS_ORACLE).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # partition law + non-vacuity: something was actually cut (the
-    # corpus has exact dups, so shared 8-grams exist), nothing negative
-    assert all(n == c + k and c >= 0 and k >= 0 for _, n, c, k in got)
-    assert any(c > 0 for _, _, c, _ in got)
+# --- r13 registrations: KS drift, hashed TF-IDF, span suppression,
+# KMV/theta sketches, Mann-Whitney, CDC reuse.
 
 
 def test_r13_staged_ops_empty_and_laws(spark):
@@ -2135,178 +1827,6 @@ def test_r13_staged_ops_layout_invariant(spark):
         assert r1 == r2, f"{name} is layout-dependent"
 
 
-def _kmv_topk_ctes(k: int) -> str:
-    from datalake_nba_dmc_spark.operators.cdc import token_hash_sql
-    from datalake_nba_dmc_spark.operators.dedup import _MERSENNE31
-
-    th = token_hash_sql("tok", "duck")
-    return rf"""
-    t AS (
-      SELECT source,
-             list_filter(string_split(
-               regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '),
-               x -> x != '') AS toks
-      FROM documents
-      WHERE text IS NOT NULL
-        AND octet_length(encode(text)) = length(text)
-    ), t2 AS (
-      SELECT source, unnest(toks) AS tok FROM t
-    ), dh AS (
-      SELECT DISTINCT source, ({th}) % {_MERSENNE31} AS h FROM t2
-    ), rk AS (
-      SELECT source, h,
-             ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS r
-      FROM dh
-    ), topk AS (SELECT * FROM rk WHERE r <= {k})
-    """
-
-
-_KMV_K = 16
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_kmv_theta_vocab_duckdb_twin(spark, sf):
-    """kmv_theta_vocab (r12-staged, registers r13 as
-    sketch_theta_vocab) vs a DuckDB twin replaying the same mixer
-    hashes, per-group k-minimum ranks, θ, and the (k−1)·P/θ estimate —
-    bit-exact, with the exact-distinct certificate column on both
-    sides. k=16 < per-source vocabulary, so the θ-division estimator
-    path is EXERCISED, not just the holds-the-whole-set small case."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.operators.dedup import _MERSENNE31
-    from datalake_nba_dmc_spark.operators.portable_sketch import (
-        kmv_theta_vocab,
-    )
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    docs = spark.read.parquet(os.path.join(sfd, "documents.parquet"))
-    K = _KMV_K
-    got = sorted(
-        (r.source, r.n_kept, r.theta, r.distinct_est_micro, r.exact_distinct)
-        for r in kmv_theta_vocab(docs, k=K).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{os.path.join(sfd, 'documents.parquet')}'"
-    )
-    sql = rf"""
-    WITH {_kmv_topk_ctes(K)},
-    pg AS (
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept,
-             CAST(MAX(h) AS BIGINT) AS maxh
-      FROM topk GROUP BY source
-    ), ex AS (
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS exact_distinct
-      FROM dh GROUP BY source
-    )
-    SELECT pg.source, pg.n_kept,
-           CAST(CASE WHEN pg.n_kept < {K} THEN {_MERSENNE31}
-                ELSE pg.maxh END AS BIGINT) AS theta,
-           CAST(CASE WHEN pg.n_kept < {K} THEN pg.n_kept * 1000000
-                ELSE {(K - 1) * _MERSENNE31 * 1_000_000} // pg.maxh
-                END AS BIGINT) AS distinct_est_micro,
-           ex.exact_distinct
-    FROM pg JOIN ex USING (source)
-    """
-    want = sorted(
-        (a, int(b), int(c), int(d), int(e))
-        for a, b, c, d, e in con.execute(sql).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # the estimator path is exercised (theta < P somewhere) AND sane
-    assert any(t < _MERSENNE31 for _, _, t, _, _ in got)
-    for _, nk, _, est, ex in got:
-        if nk == K and ex >= K:
-            assert 0.4 * ex <= est / 1e6 <= 2.5 * ex
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_kmv_theta_overlap_duckdb_twin(spark, sf):
-    """kmv_theta_vocab_overlap (r12-staged, registers r13 as
-    sketch_theta_vocab_overlap) vs a DuckDB twin: pairwise θ∩, the
-    shared/union kept-hash counts below θ∩, and both micro estimates —
-    bit-exact. The theta set-op surface is the thing mergeable HLL
-    counters cannot provide."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.operators.dedup import _MERSENNE31
-    from datalake_nba_dmc_spark.operators.portable_sketch import (
-        kmv_theta_vocab_overlap,
-    )
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    docs = spark.read.parquet(os.path.join(sfd, "documents.parquet"))
-    K = _KMV_K
-    got = sorted(
-        tuple(r) for r in kmv_theta_vocab_overlap(docs, k=K).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{os.path.join(sfd, 'documents.parquet')}'"
-    )
-    sql = rf"""
-    WITH {_kmv_topk_ctes(K)},
-    pg AS (
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept,
-             CAST(MAX(h) AS BIGINT) AS maxh
-      FROM topk GROUP BY source
-    ), thetas AS (
-      SELECT source,
-             CAST(CASE WHEN n_kept < {K} THEN {_MERSENNE31}
-                  ELSE maxh END AS BIGINT) AS theta
-      FROM pg
-    ), pairs AS (
-      SELECT a.source AS source_a, b.source AS source_b,
-             LEAST(a.theta, b.theta) AS theta_min
-      FROM thetas a JOIN thetas b ON a.source < b.source
-    ), common AS (
-      SELECT p.source_a, p.source_b,
-             CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM pairs p
-      JOIN topk ka ON ka.source = p.source_a AND ka.h < p.theta_min
-      JOIN topk kb ON kb.source = p.source_b AND kb.h = ka.h
-      GROUP BY 1, 2
-    ), uni AS (
-      SELECT source_a, source_b,
-             CAST(COUNT(DISTINCT h) AS BIGINT) AS n_union
-      FROM (
-        SELECT p.source_a, p.source_b, ka.h
-        FROM pairs p JOIN topk ka
-          ON ka.source = p.source_a AND ka.h < p.theta_min
-        UNION ALL
-        SELECT p.source_a, p.source_b, kb.h
-        FROM pairs p JOIN topk kb
-          ON kb.source = p.source_b AND kb.h < p.theta_min
-      ) GROUP BY 1, 2
-    )
-    SELECT p.source_a, p.source_b, p.theta_min,
-           COALESCE(c.n_common, 0) AS n_common, u.n_union,
-           (COALESCE(c.n_common, 0) * {_MERSENNE31} * 1000000)
-             // GREATEST(p.theta_min, 1) AS inter_est_micro,
-           (u.n_union * {_MERSENNE31} * 1000000)
-             // GREATEST(p.theta_min, 1) AS union_est_micro
-    FROM pairs p
-    JOIN uni u USING (source_a, source_b)
-    LEFT JOIN common c USING (source_a, source_b)
-    """
-    want = sorted(
-        (a, b, int(c), int(d), int(e), int(f), int(g))
-        for a, b, c, d, e, f, g in con.execute(sql).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # set-algebra sanity on every pair: common <= union <= 2k,
-    # inter <= union estimates
-    for _, _, tm, nc, nu, ie, ue in got:
-        assert 0 <= nc <= nu <= 2 * K and ie <= ue
-
-
 def test_kmv_and_mw_empty_degenerate_and_dup_laws(spark):
     """Empty/degenerate + duplication laws for the KMV and Mann-Whitney
     staged ops: empty in → empty out; ASCII contract drops degenerate
@@ -2360,81 +1880,6 @@ def test_kmv_and_mw_empty_degenerate_and_dup_laws(spark):
         assert m.u2_a + m.u2_b == 2 * m.n_a * m.n_b
 
 
-_MW_ORACLE = """
-WITH base AS (
-  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS xs,
-         CASE WHEN o_orderdate < DATE '1998-01-01' THEN 1 ELSE 0 END AS ia
-  FROM orders WHERE o_totalprice IS NOT NULL AND o_orderdate IS NOT NULL
-), g AS (
-  SELECT xs, CAST(SUM(ia) AS BIGINT) AS ca,
-         CAST(SUM(1 - ia) AS BIGINT) AS cb
-  FROM base GROUP BY xs
-), c AS (
-  SELECT xs, ca, cb,
-         CAST(SUM(ca + cb) OVER (ORDER BY xs ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS cumall
-  FROM g
-), r AS (
-  SELECT CAST(SUM(ca * (2 * (cumall - (ca + cb)) + (ca + cb) + 1))
-              AS BIGINT) AS r2a
-  FROM c
-), n AS (
-  SELECT CAST(SUM(ia) AS BIGINT) AS n_a,
-         CAST(COUNT(*) - SUM(ia) AS BIGINT) AS n_b
-  FROM base
-)
-SELECT n.n_a, n.n_b,
-       r.r2a - n.n_a * (n.n_a + 1) AS u2_a,
-       2 * n.n_a * n.n_b - (r.r2a - n.n_a * (n.n_a + 1)) AS u2_b,
-       (r.r2a - n.n_a * (n.n_a + 1)) * 1000000
-         // GREATEST(2 * n.n_a * n.n_b, 1) AS auc_micro
-FROM r CROSS JOIN n WHERE r.r2a IS NOT NULL
-"""
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_mann_whitney_duckdb_twin(spark, sf):
-    """mann_whitney_u (r12-staged, registers r13 as stat_mann_whitney)
-    vs a DuckDB twin using the sequential running-sum window over the
-    value grid — structurally independent of the two-phase prefix-sum
-    operator; doubled midranks keep ties integer-exact, so every value
-    (including the AUC normalization) is bit-exact. A tie-heavy hand
-    case (A=[1,2,2], B=[2,3] → U_a=1, AUC=1/6) is pinned in the laws
-    test below; the integer contract's tie handling equals the
-    classical midrank definition."""
-    import duckdb as _duckdb
-
-    from pyspark.sql import functions as F
-
-    from datalake_nba_dmc_spark.operators.stats import mann_whitney_u
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    orders = TableRegistry(spark, sfd).orders
-    got = [
-        tuple(r)
-        for r in mann_whitney_u(
-            orders,
-            "o_totalprice",
-            F.col("o_orderdate") < F.lit("1998-01-01").cast("date"),
-        ).collect()
-    ]
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM '{os.path.join(sfd, 'orders.parquet')}'"
-    )
-    want = [
-        tuple(int(v) for v in row)
-        for row in con.execute(_MW_ORACLE).fetchall()
-    ]
-    assert got == want and len(got) == 1
-    n_a, n_b, u2a, u2b, auc = got[0]
-    assert u2a + u2b == 2 * n_a * n_b and 0 <= auc <= 1_000_000
-
-
 def test_mann_whitney_tie_hand_case(spark):
     """Classical midrank hand case with ties: A=[1,2,2], B=[2,3] →
     U_a = #(a>b) + 0.5·#(a=b) = 1.0 → u2_a = 2, u2_b = 10, AUC = 1/6."""
@@ -2448,126 +1893,6 @@ def test_mann_whitney_tie_hand_case(spark):
     )
     [r] = mann_whitney_u(sm, "v", F.col("s")).collect()
     assert (r.n_a, r.n_b, r.u2_a, r.u2_b, r.auc_micro) == (3, 2, 2, 10, 166666)
-
-
-def _cdc_chain(prefix: str, src_cte: str, divisor: int) -> str:
-    """One CDC chunking CTE chain over ``src_cte`` (doc_id, text rows),
-    names prefixed — lets a twin chunk two snapshots in one query."""
-    from datalake_nba_dmc_spark.operators.cdc import _M, token_hash_sql
-    from datalake_nba_dmc_spark.operators.hyperball import mixer_sql
-
-    th = token_hash_sql("tok", "duck")
-    csum = (
-        f"CAST(list_sum(list_transform(range(1, e - s + 1), "
-        f"k -> (th[CAST(s + k AS INTEGER)] % {_M}) * k)) AS BIGINT)"
-    )
-    p = prefix
-    return rf"""
-    {p}t AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'),
-                         x -> x != '') AS toks
-      FROM {src_cte}
-    ), {p}t2 AS (
-      SELECT doc_id, toks FROM {p}t WHERE len(toks) > 0
-    ), {p}h AS (
-      SELECT doc_id, list_transform(toks, tok -> {th}) AS th FROM {p}t2
-    ), {p}b AS (
-      SELECT doc_id, th,
-             list_concat([0], list_transform(
-               list_filter(range(0, len(th)),
-                           i -> th[CAST(i + 1 AS INTEGER)] % {divisor} = 0),
-               x -> x + 1)) AS starts,
-             list_concat(list_transform(
-               list_filter(range(0, len(th)),
-                           i -> th[CAST(i + 1 AS INTEGER)] % {divisor} = 0),
-               x -> x + 1), [len(th)]) AS ends
-      FROM {p}h
-    ), {p}spans AS (
-      SELECT doc_id, th,
-             starts[CAST(u.i AS INTEGER)] AS s,
-             ends[CAST(u.i AS INTEGER)] AS e
-      FROM {p}b, UNNEST(range(1, len(starts) + 1)) AS u(i)
-      WHERE starts[CAST(u.i AS INTEGER)] < ends[CAST(u.i AS INTEGER)]
-    ), {p}chunks AS (
-      SELECT doc_id,
-             {mixer_sql(f"(({csum}) % {_M})", "duck")} AS chunk_hash
-      FROM {p}spans
-    )
-    """
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_cdc_reuse_report_duckdb_twin(spark, sf):
-    """cdc_reuse_report (r12-staged, registers r13 as
-    dedup_cdc_reuse) vs a DuckDB twin chunking BOTH snapshots through
-    the shared dialect-rendered chain and replaying the per-doc
-    exact-fingerprint reuse counts — bit-exact; plus the contract laws:
-    unedited docs reuse everything, edited docs reuse MOST (the
-    edit-stability property fixed-size chunking lacks)."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.operators.cdc import cdc_reuse_report
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    docs = spark.read.parquet(os.path.join(sfd, "documents.parquet"))
-    D, E = 16, 3
-    got = sorted(
-        (r.doc_id, r.edited, r.n_chunks, r.n_reused, r.reused_ppm)
-        for r in cdc_reuse_report(docs, divisor=D, edit_every=E).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{os.path.join(sfd, 'documents.parquet')}'"
-    )
-    sql = rf"""
-    WITH base AS (
-      SELECT DISTINCT doc_id, text FROM documents
-      WHERE text IS NOT NULL
-        AND octet_length(encode(text)) = length(text)
-    ), v2src AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % {E} = 0 THEN 'recrawl ' || text
-                  ELSE text END AS text
-      FROM base
-    ), {_cdc_chain("v1_", "base", D)},
-    {_cdc_chain("v2_", "v2src", D)},
-    v1set AS (SELECT DISTINCT doc_id, chunk_hash FROM v1_chunks),
-    counts AS (
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_chunks
-      FROM v2_chunks GROUP BY doc_id
-    ), reused AS (
-      SELECT v2.doc_id, CAST(COUNT(*) AS BIGINT) AS n_reused
-      FROM v2_chunks v2
-      WHERE EXISTS (SELECT 1 FROM v1set v1
-                    WHERE v1.doc_id = v2.doc_id
-                      AND v1.chunk_hash = v2.chunk_hash)
-      GROUP BY v2.doc_id
-    )
-    SELECT c.doc_id,
-           CAST(CASE WHEN c.doc_id % {E} = 0 THEN 1 ELSE 0 END AS INTEGER)
-             AS edited,
-           c.n_chunks,
-           COALESCE(r.n_reused, 0) AS n_reused,
-           (COALESCE(r.n_reused, 0) * 1000000) // GREATEST(c.n_chunks, 1)
-             AS reused_ppm
-    FROM counts c LEFT JOIN reused r ON c.doc_id = r.doc_id
-    """
-    want = sorted(
-        tuple(int(v) for v in row) for row in con.execute(sql).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # contract laws: unedited docs reuse EVERYTHING; edited docs reuse
-    # most of their chunks in aggregate (front edit, CDC re-syncs)
-    unedited = [(n, r) for _, e, n, r, _ in got if e == 0]
-    edited = [(n, r) for _, e, n, r, _ in got if e == 1]
-    assert unedited and all(n == r for n, r in unedited)
-    assert edited and sum(r for _, r in edited) >= 0.5 * sum(
-        n for n, _ in edited
-    )
 
 
 def test_cdc_reuse_report_empty_and_dup_laws(spark):
@@ -2589,463 +1914,9 @@ def test_cdc_reuse_report_empty_and_dup_laws(spark):
     assert one == two and len(one) == 12
 
 
-# --- r13-staged slate (registers r14): bucketed coreness, ExactSubstr
-# end-to-end pipeline, per-segment KS/MW, theta difference, as-of
-# tolerance. Each twin runs at BOTH gate scales (the two-scale bar).
-
-_NORM13 = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
-
-_EXACTSUBSTR_ORACLE = rf"""
-WITH toks_t AS (
-  SELECT doc_id, text,
-         list_filter(string_split({_NORM13}, ' '), x -> x != '') AS toks
-  FROM documents
-), grams AS (
-  SELECT doc_id, i - 1 AS pos,
-         array_to_string(toks[i : i + 7], ' ') AS gram
-  FROM toks_t, LATERAL unnest(range(1, len(toks) - 6)) AS t(i)
-  WHERE len(toks) >= 8
-), occ AS (
-  SELECT doc_id, pos
-  FROM (SELECT doc_id, pos, count(*) OVER (PARTITION BY gram) AS cnt
-        FROM grams)
-  WHERE cnt >= 2
-), flagged AS (
-  SELECT doc_id, pos,
-         CASE WHEN pos > coalesce(max(pos + 8) OVER (
-                PARTITION BY doc_id ORDER BY pos
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-              THEN 1 ELSE 0 END AS is_new
-  FROM occ
-), sp AS (
-  SELECT doc_id, pos,
-         sum(is_new) OVER (PARTITION BY doc_id ORDER BY pos
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS span_id
-  FROM flagged
-), spans AS (
-  SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e
-  FROM sp GROUP BY doc_id, span_id
-), pos_tok AS (
-  SELECT DISTINCT doc_id, u.i - 1 AS pos, toks[CAST(u.i AS INTEGER)] AS tok
-  FROM toks_t, UNNEST(range(1, len(toks) + 1)) AS u(i)
-), kept AS (
-  SELECT p.doc_id, p.pos, p.tok
-  FROM pos_tok p
-  WHERE NOT EXISTS (SELECT 1 FROM spans s
-                    WHERE s.doc_id = p.doc_id
-                      AND p.pos >= s.s AND p.pos < s.e)
-), agg AS (
-  SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS mt,
-         CAST(COUNT(*) AS BIGINT) AS n_kept
-  FROM kept GROUP BY doc_id
-)
-SELECT t.doc_id,
-       CASE WHEN t.text IS NULL THEN NULL
-            ELSE COALESCE(a.mt, '') END AS masked_text,
-       CASE WHEN t.text IS NULL THEN CAST(0 AS BIGINT)
-            ELSE CAST(len(t.toks) - COALESCE(a.n_kept, 0) AS BIGINT)
-       END AS n_tokens_removed
-FROM toks_t t LEFT JOIN agg a USING (doc_id)
-"""
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_exactsubstr_pipeline_duckdb_twin(spark, sf):
-    """mask_repeated_spans end-to-end (r13-staged, registers r14 as
-    dedup_exactsubstr_pipeline — VERDICT r12 ask #7: generation ->
-    cut-list -> suppression as ONE query emitting the masked corpus) vs
-    a DuckDB twin re-deriving spans from gram STRINGS and re-joining
-    the surviving tokens — every masked text byte-identical."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.operators.dedup import mask_repeated_spans
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    docs = TableRegistry(spark, sfd).documents
-    got = sorted(
-        (r.doc_id, r.masked_text, r.n_tokens_removed)
-        for r in mask_repeated_spans(docs, n=8, min_count=2)
-        .select("doc_id", "masked_text", "n_tokens_removed")
-        .collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{os.path.join(sfd, 'documents.parquet')}'"
-    )
-    want = sorted(
-        (int(a), b, int(c))
-        for a, b, c in con.execute(_EXACTSUBSTR_ORACLE).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # non-vacuous (the corpus HAS cross-doc duplication) and the
-    # partition law: masked tokens + removed == original tokens
-    assert any(c > 0 for _, _, c in got)
-    from pyspark.sql import functions as F
-
-    from datalake_nba_dmc_spark.operators.dedup import normalize_text
-
-    orig = {
-        r.doc_id: r.n
-        for r in docs.select(
-            "doc_id",
-            F.size(
-                F.filter(
-                    F.split(normalize_text("text"), " "),
-                    lambda t: t != "",
-                )
-            ).alias("n"),
-        ).collect()
-    }
-    for d, mt, c in got:
-        kept = len([t for t in (mt or "").split(" ") if t != ""])
-        assert kept + c == max(orig[d] or 0, 0)
-
-
-_KS_BY_ORACLE = """
-WITH base AS (
-  SELECT o_orderpriority AS seg,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS xs,
-         CASE WHEN o_orderdate < DATE '1998-01-01' THEN 1 ELSE 0 END AS ia
-  FROM orders
-  WHERE o_totalprice IS NOT NULL AND o_orderdate IS NOT NULL
-    AND o_orderpriority IS NOT NULL
-), g AS (
-  SELECT seg, xs, CAST(SUM(ia) AS BIGINT) AS ca,
-         CAST(SUM(1 - ia) AS BIGINT) AS cb
-  FROM base GROUP BY seg, xs
-), c AS (
-  SELECT seg, xs,
-         CAST(SUM(ca) OVER (PARTITION BY seg ORDER BY xs
-                            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_a,
-         CAST(SUM(cb) OVER (PARTITION BY seg ORDER BY xs
-                            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_b
-  FROM g
-), n AS (
-  SELECT seg, CAST(SUM(ia) AS BIGINT) AS n_a,
-         CAST(COUNT(*) - SUM(ia) AS BIGINT) AS n_b
-  FROM base GROUP BY seg
-)
-SELECT n.seg AS o_orderpriority, n.n_a, n.n_b,
-       CAST(MAX(ABS(c.cum_a * n.n_b - c.cum_b * n.n_a)) AS BIGINT) AS ks_num,
-       CAST(MAX(ABS(c.cum_a * n.n_b - c.cum_b * n.n_a)) * 1000000
-            // GREATEST(n.n_a * n.n_b, 1) AS BIGINT) AS ks_d_micro
-FROM c JOIN n ON c.seg = n.seg
-GROUP BY n.seg, n.n_a, n.n_b
-"""
-
-_MW_BY_ORACLE = """
-WITH base AS (
-  SELECT o_orderpriority AS seg,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS xs,
-         CASE WHEN o_orderdate < DATE '1998-01-01' THEN 1 ELSE 0 END AS ia
-  FROM orders
-  WHERE o_totalprice IS NOT NULL AND o_orderdate IS NOT NULL
-    AND o_orderpriority IS NOT NULL
-), g AS (
-  SELECT seg, xs, CAST(SUM(ia) AS BIGINT) AS ca,
-         CAST(SUM(1 - ia) AS BIGINT) AS cb
-  FROM base GROUP BY seg, xs
-), c AS (
-  SELECT seg, xs, ca, cb,
-         CAST(SUM(ca + cb) OVER (PARTITION BY seg ORDER BY xs
-                                 ROWS UNBOUNDED PRECEDING) AS BIGINT)
-           AS cumall
-  FROM g
-), r AS (
-  SELECT seg, CAST(SUM(ca * (2 * (cumall - (ca + cb)) + (ca + cb) + 1))
-              AS BIGINT) AS r2a
-  FROM c GROUP BY seg
-), n AS (
-  SELECT seg, CAST(SUM(ia) AS BIGINT) AS n_a,
-         CAST(COUNT(*) - SUM(ia) AS BIGINT) AS n_b
-  FROM base GROUP BY seg
-)
-SELECT n.seg AS o_orderpriority, n.n_a, n.n_b,
-       r.r2a - n.n_a * (n.n_a + 1) AS u2_a,
-       2 * n.n_a * n.n_b - (r.r2a - n.n_a * (n.n_a + 1)) AS u2_b,
-       (r.r2a - n.n_a * (n.n_a + 1)) * 1000000
-         // GREATEST(2 * n.n_a * n.n_b, 1) AS auc_micro
-FROM r JOIN n ON r.seg = n.seg
-"""
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_ks_by_segment_duckdb_twin(spark, sf):
-    """ks_two_sample_by (r13-staged, registers r14 as
-    stat_ks_drift_by_segment) vs the sequential per-segment
-    running-sum twin — the drift SCAN next to the global registered
-    stat_ks_drift; every per-segment integer bit-exact."""
-    import duckdb as _duckdb
-
-    from pyspark.sql import functions as F
-
-    from datalake_nba_dmc_spark.operators.stats import ks_two_sample_by
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    orders = TableRegistry(spark, sfd).orders
-    got = sorted(
-        tuple(r)
-        for r in ks_two_sample_by(
-            orders,
-            "o_orderpriority",
-            "o_totalprice",
-            F.col("o_orderdate") < F.lit("1998-01-01").cast("date"),
-        ).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM '{os.path.join(sfd, 'orders.parquet')}'"
-    )
-    want = sorted(
-        (a, int(b), int(c), int(d), int(e))
-        for a, b, c, d, e in con.execute(_KS_BY_ORACLE).fetchall()
-    )
-    assert got == want and len(got) == 5
-    for _, n_a, n_b, ks_num, ks_micro in got:
-        assert 0 <= ks_micro <= 1_000_000 and ks_num <= n_a * n_b
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_mw_by_segment_duckdb_twin(spark, sf):
-    """mann_whitney_u_by (r13-staged, registers r14 as
-    stat_mann_whitney_by_segment) vs the sequential per-segment twin;
-    the U-sum law u2_a + u2_b == 2*n_a*n_b holds PER SEGMENT."""
-    import duckdb as _duckdb
-
-    from pyspark.sql import functions as F
-
-    from datalake_nba_dmc_spark.operators.stats import mann_whitney_u_by
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    orders = TableRegistry(spark, sfd).orders
-    got = sorted(
-        tuple(r)
-        for r in mann_whitney_u_by(
-            orders,
-            "o_orderpriority",
-            "o_totalprice",
-            F.col("o_orderdate") < F.lit("1998-01-01").cast("date"),
-        ).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM '{os.path.join(sfd, 'orders.parquet')}'"
-    )
-    want = sorted(
-        (a, int(b), int(c), int(d), int(e), int(f))
-        for a, b, c, d, e, f in con.execute(_MW_BY_ORACLE).fetchall()
-    )
-    assert got == want and len(got) == 5
-    for _, n_a, n_b, u2a, u2b, auc in got:
-        assert u2a + u2b == 2 * n_a * n_b and 0 <= auc <= 1_000_000
-
-
-def _theta_diff_oracle(k: int) -> str:
-    from datalake_nba_dmc_spark.operators.dedup import _MERSENNE31
-
-    return rf"""
-    WITH {_kmv_topk_ctes(k)},
-    pg AS (
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept,
-             CAST(MAX(h) AS BIGINT) AS maxh
-      FROM topk GROUP BY source
-    ), thetas AS (
-      SELECT source,
-             CAST(CASE WHEN n_kept < {k} THEN {_MERSENNE31}
-                  ELSE maxh END AS BIGINT) AS theta
-      FROM pg
-    ), pairs AS (
-      SELECT a.source AS source_a, b.source AS source_b,
-             LEAST(a.theta, b.theta) AS theta_min
-      FROM thetas a JOIN thetas b ON a.source != b.source
-    ), abelow AS (
-      SELECT p.source_a, p.source_b, p.theta_min, ka.h
-      FROM pairs p JOIN topk ka
-        ON ka.source = p.source_a AND ka.h < p.theta_min
-    ), aonly AS (
-      SELECT source_a, source_b, theta_min,
-             CAST(COUNT(*) AS BIGINT) AS n_a_only
-      FROM abelow ab
-      WHERE NOT EXISTS (SELECT 1 FROM topk kb
-                        WHERE kb.source = ab.source_b AND kb.h = ab.h)
-      GROUP BY 1, 2, 3
-    )
-    SELECT p.source_a, p.source_b, p.theta_min,
-           COALESCE(o.n_a_only, 0) AS n_a_only,
-           (COALESCE(o.n_a_only, 0) * {_MERSENNE31} * 1000000)
-             // GREATEST(p.theta_min, 1) AS diff_est_micro
-    FROM pairs p
-    LEFT JOIN aonly o USING (source_a, source_b, theta_min)
-    """
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_theta_difference_duckdb_twin(spark, sf):
-    """kmv_theta_vocab_difference (r13-staged, registers r14 as
-    sketch_theta_vocab_difference) vs a DuckDB twin: per ORDERED source
-    pair, the below-theta_min kept-a hashes absent from b's sketch and
-    the scaled |A \\ B| estimate — bit-exact; completes the theta set
-    algebra next to the registered overlap query."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.operators.portable_sketch import (
-        kmv_theta_vocab_difference,
-    )
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    docs = spark.read.parquet(os.path.join(sfd, "documents.parquet"))
-    K = _KMV_K
-    got = sorted(
-        tuple(r) for r in kmv_theta_vocab_difference(docs, k=K).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{os.path.join(sfd, 'documents.parquet')}'"
-    )
-    want = sorted(
-        (a, b, int(c), int(d), int(e))
-        for a, b, c, d, e in con.execute(_theta_diff_oracle(K)).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # ordered-pair grid is complete (g*(g-1) rows) and bounded:
-    # n_a_only <= k on every row
-    groups = {a for a, *_ in got}
-    assert len(got) == len(groups) * (len(groups) - 1)
-    assert all(0 <= d <= K for _, _, _, d, _ in got)
-
-
-_ASOF_WITHIN_ORACLE = """
-WITH p AS (
-  SELECT * FROM (
-    SELECT user_id AS k, ts AS pt, event_id AS purchase_event_id,
-           ROW_NUMBER() OVER (PARTITION BY user_id, ts
-                              ORDER BY event_id DESC) AS rn
-    FROM events WHERE event_type = 'purchase' AND ts IS NOT NULL
-  ) WHERE rn = 1
-)
-SELECT e.event_id, e.user_id, e.ts,
-       CASE WHEN e.ts IS NOT NULL
-                 AND p.pt >= e.ts - INTERVAL 1 HOUR
-            THEN p.purchase_event_id END AS asof_purchase_event_id
-FROM events e
-ASOF LEFT JOIN p ON e.user_id = p.k AND e.ts >= p.pt
-"""
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_asof_within_duckdb_twin(spark, sf):
-    """asof_join_within (r13-staged, registers r14 as
-    events_asof_within_tolerance): time-since-last-purchase capped at
-    1 hour — the pandas merge_asof(tolerance)/kdb window-join
-    semantics, implemented as ONE union-merge as-of pass plus a
-    map-side staleness mask (the carried row is THE latest <= ts, so
-    if it is stale every candidate is). The DuckDB twin uses native
-    ASOF LEFT JOIN with the same tolerance CASE — every match and
-    every nulled-stale row identical."""
-    import duckdb as _duckdb
-
-    from pyspark.sql import functions as F
-
-    from datalake_nba_dmc_spark.operators.temporal import asof_join_within
-    from datalake_nba_dmc_spark.operators.windows import top1_per_group
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    t = TableRegistry(spark, sfd)
-    ev = t.events.select("event_id", "user_id", "ts")
-    purch = top1_per_group(
-        t.events.filter(F.col("event_type") == "purchase").select(
-            "user_id",
-            F.col("ts").alias("pt"),
-            F.col("event_id").alias("purchase_event_id"),
-        ),
-        ["user_id", "pt"],
-        [F.col("purchase_event_id").desc()],
-    )
-    got = sorted(
-        (r.event_id, r.user_id, str(r.ts), r.asof_purchase_event_id)
-        for r in asof_join_within(
-            ev,
-            purch,
-            key="user_id",
-            left_ts="ts",
-            right_ts="pt",
-            right_cols=["purchase_event_id"],
-            tolerance="interval 1 hour",
-        ).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{os.path.join(sfd, 'events.parquet')}'"
-    )
-    want = sorted(
-        (int(a), int(b), str(c), (int(d) if d is not None else None))
-        for a, b, c, d in con.execute(_ASOF_WITHIN_ORACLE).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # the tolerance BITES both ways: some matches survive, some
-    # as-of matches were nulled as stale
-    n_match = sum(1 for r in got if r[3] is not None)
-    assert 0 < n_match < len(got)
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_coreness_bucketed_duckdb_twin(spark, sf):
-    """coreness_micro_bucketed (r13-staged, registers r14 as
-    graph_coreness_bucketed — the VERDICT r12 ask #3 skew-safe
-    histogram h-index, EXECUTED) vs the registered coreness twin (the
-    unrolled sequential h-index recurrence): the bucketed form computes
-    the same per-round values, so the same oracle pins it bit-exactly."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.operators.graph import (
-        coreness_micro_bucketed,
-    )
-    from datalake_nba_dmc_spark.sources import TableRegistry
-    from datalake_nba_dmc_spark.suite.graph import _coreness_oracle
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    from pyspark.sql import functions as F
-
-    docs = TableRegistry(spark, sfd).documents
-    edges = docs.select(
-        (F.col("doc_id") % 101).alias("src"),
-        (F.expr("doc_id div 101") % 101).alias("dst"),
-    ).filter(F.col("src") != F.col("dst"))
-    got = sorted(
-        tuple(r) for r in coreness_micro_bucketed(edges, n_rounds=8).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{os.path.join(sfd, 'documents.parquet')}'"
-    )
-    want = sorted(
-        (int(a), int(b))
-        for a, b in con.execute(_coreness_oracle(8)).fetchall()
-    )
-    assert got == want and len(got) == 101
+# --- r14 registrations: bucketed coreness, ExactSubstr end-to-end
+# pipeline, per-segment KS/MW, theta difference, as-of tolerance,
+# trailing windows, quantiles, int8 top-k, leakage-safe split.
 
 
 def test_r14_staged_ops_empty_degenerate_and_dup_laws(spark):
@@ -3212,20 +2083,26 @@ def test_r14_staged_ops_empty_degenerate_and_dup_laws(spark):
 
 @needs_testdata
 def test_r14_staged_ops_layout_invariant(spark):
-    """Pre-empts the partition-perturbation audit for the r14 slate:
-    bit-identical rows under 3 vs 64 shuffle partitions (the full 1- vs
-    13-partition INPUT perturbation runs in the robustness battery,
-    which re-reads mutated fixtures with perturbed layouts)."""
-    from datalake_nba_dmc_spark.suite.staged import staged_specs
+    """Partition-perturbation pin for the last three registered operators
+    (trailing distinct count, stratified split, drift panel): bit-identical
+    rows under 3 vs 64 shuffle partitions (the full 1- vs 13-partition
+    INPUT perturbation runs in the robustness battery, which re-reads
+    mutated fixtures with perturbed layouts)."""
+    from datalake_nba_dmc_spark.suite import load_all
 
-    specs = staged_specs()
+    specs = load_all()
+    names = (
+        "events_trailing_distinct_items",
+        "sample_stratified_split",
+        "stat_drift_panel_by_segment",
+    )
     old = spark.conf.get("spark.sql.shuffle.partitions")
     results: dict[str, list] = {}
     try:
         for parts in (3, 64):
             spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            for name, spec in specs.items():
-                df = spec.builder(spark, SF)
+            for name in names:
+                df = specs[name].builder(spark, SF)
                 rows = sorted(
                     tuple(str(v) for v in r) for r in df.collect()
                 )
@@ -3262,8 +2139,6 @@ def test_trailing_window_agg_duckdb_twin(spark, sf):
     event, computed by PREFIX-SUM DIFFERENCING (two as-of passes, no
     range explosion) vs a DuckDB twin that materializes the range join
     directly — every count and sum bit-exact."""
-    import duckdb as _duckdb
-
     from pyspark.sql import functions as F
 
     from datalake_nba_dmc_spark.operators.temporal import (
@@ -3271,7 +2146,7 @@ def test_trailing_window_agg_duckdb_twin(spark, sf):
     )
     from datalake_nba_dmc_spark.sources import TableRegistry
 
-    sfd = f"/root/testdata/{sf}"
+    sfd = os.path.join(TESTDATA, sf)
     if not os.path.isdir(sfd):
         pytest.skip("scale dir missing")
     t = TableRegistry(spark, sfd)
@@ -3291,10 +2166,7 @@ def test_trailing_window_agg_duckdb_twin(spark, sf):
             window="interval 1 hour",
         ).collect()
     )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{os.path.join(sfd, 'events.parquet')}'"
-    )
+    con = _oracle_con(sf)
     want = sorted(
         (int(a), int(b), str(c), int(d), int(e))
         for a, b, c, d, e in con.execute(_TRAILING_WINDOW_ORACLE).fetchall()
@@ -3365,94 +2237,6 @@ def test_trailing_window_agg_empty_and_hand_case(spark):
     assert got == {1: (2, 600), 2: (0, 0), 3: (0, 0)}
 
 
-_QUANTILES_BY_ORACLE = """
-WITH base AS (
-  SELECT o_orderpriority AS seg,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS xs
-  FROM orders
-  WHERE o_totalprice IS NOT NULL AND o_orderpriority IS NOT NULL
-), g AS (
-  SELECT seg, xs, CAST(COUNT(*) AS BIGINT) AS c FROM base GROUP BY seg, xs
-), cgrid AS (
-  SELECT seg, xs, c,
-         CAST(SUM(c) OVER (PARTITION BY seg ORDER BY xs
-                           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-  FROM g
-), n AS (
-  SELECT seg, CAST(COUNT(*) AS BIGINT) AS n FROM base GROUP BY seg
-), probs AS (SELECT unnest([25, 50, 75, 90, 99]) AS p_pct)
-SELECT c.seg AS o_orderpriority, CAST(p.p_pct AS INTEGER) AS p_pct, n.n,
-       c.xs AS q_scaled
-FROM cgrid c JOIN n USING (seg) CROSS JOIN probs p
-WHERE c.cum >= ((p.p_pct * n.n + 99) // 100)
-  AND c.cum - c.c < ((p.p_pct * n.n + 99) // 100)
-"""
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_exact_quantiles_by_duckdb_twin(spark, sf):
-    """exact_quantiles_by (r13-staged, registers r14 as
-    stat_exact_quantiles_by_segment): exact nearest-rank quantiles per
-    segment via a rank-cut over the per-segment prefix-sum grid — no
-    corpus sort, no percentile_approx sketch — vs the sequential
-    running-sum twin, PLUS a brute-force sorted-list cross-check of
-    every returned value (the check that caught the truncating-vs-
-    floor division ceiling trap during staging: Spark `div` and DuckDB
-    `//` truncate toward zero, so ceil must be (a+99) div 100, never
-    -((-a) div 100))."""
-    import math
-
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.operators.stats import exact_quantiles_by
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    orders = TableRegistry(spark, sfd).orders
-    got = sorted(
-        tuple(r)
-        for r in exact_quantiles_by(
-            orders,
-            "o_orderpriority",
-            "o_totalprice",
-            probs_pct=(25, 50, 75, 90, 99),
-        ).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM '{os.path.join(sfd, 'orders.parquet')}'"
-    )
-    want = sorted(
-        (a, int(b), int(c), int(d))
-        for a, b, c, d in con.execute(_QUANTILES_BY_ORACLE).fetchall()
-    )
-    assert got == want and len(got) == 25  # 5 segments x 5 probs
-    # brute-force: every value IS the ceil(p*n/100)-th smallest
-    rows = con.execute(
-        "SELECT o_orderpriority, CAST(round(o_totalprice*100) AS BIGINT) "
-        "FROM orders WHERE o_totalprice IS NOT NULL "
-        "AND o_orderpriority IS NOT NULL"
-    ).fetchall()
-    segs: dict = {}
-    for s, v in rows:
-        segs.setdefault(s, []).append(v)
-    for s in segs:
-        segs[s].sort()
-    for s, p, n, q in got:
-        assert n == len(segs[s])
-        assert q == segs[s][math.ceil(p * n / 100) - 1], (s, p)
-    # quantiles are monotone in p within every segment
-    by_seg: dict = {}
-    for s, p, _, q in got:
-        by_seg.setdefault(s, []).append((p, q))
-    for s, pq in by_seg.items():
-        qs = [q for _, q in sorted(pq)]
-        assert qs == sorted(qs), s
-
-
 def test_exact_quantiles_by_empty_dup_and_validation(spark):
     """Empty in -> empty out; duplication law (n doubles, quantile
     VALUES bit-identical — rank and cum double together); prob
@@ -3495,92 +2279,6 @@ def test_segment_broadcast_cap_guard(spark, monkeypatch):
     assert "broadcast contract" in str(ei.value)
     monkeypatch.setattr(S, "_SEGMENT_BROADCAST_CAP", 100_000)
     assert len(S.exact_quantiles_by(df, "seg", "v").collect()) == 15
-
-
-_INT8_TOPK_ORACLE = """
-WITH base AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings WHERE embedding IS NOT NULL
-), m AS (
-  SELECT vec_id, e,
-         list_max(list_transform(e, x -> abs(x))) AS ma
-  FROM base
-), codes AS (
-  SELECT vec_id, ma,
-         CASE WHEN ma = 0
-              THEN list_transform(e, x -> CAST(0 AS BIGINT))
-              ELSE list_transform(e, x -> CAST(round(x * 127.0 / ma)
-                                               AS BIGINT)) END AS c
-  FROM m
-), q AS (
-  SELECT vec_id AS q_id, c AS qc, ma AS maq
-  FROM codes ORDER BY vec_id LIMIT 8
-), dots AS (
-  SELECT q.q_id, cd.vec_id AS c_id,
-         CAST(list_sum(list_transform(range(1, len(cd.c) + 1),
-              j -> q.qc[CAST(j AS INTEGER)] * cd.c[CAST(j AS INTEGER)]))
-              AS BIGINT) AS dot,
-         q.maq, cd.ma
-  FROM q JOIN codes cd ON cd.vec_id != q.q_id
-), sc AS (
-  SELECT q_id, c_id, dot,
-         CAST(round(CAST(dot AS DOUBLE) * maq * ma * 1000000.0
-                    / 16129.0) AS BIGINT) AS score_micro
-  FROM dots
-), r AS (
-  SELECT q_id, c_id, dot, score_micro,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY score_micro DESC, c_id ASC) AS rnk
-  FROM sc
-)
-SELECT q_id, CAST(rnk AS BIGINT) AS rank, c_id, dot, score_micro
-FROM r WHERE rnk <= 5
-"""
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_int8_dot_topk_duckdb_twin(spark, sf):
-    """int8_dot_topk (r13-staged, registers r14 as sim_int8_dot_topk —
-    the first similarity query with a FULL-VALUE cross-engine oracle):
-    symmetric per-vector int8 quantization turns every score into an
-    exact int64 dot product, so the DuckDB twin replays quantization,
-    every dot, and the deterministic (dot DESC, id ASC) top-k
-    bit-exactly — where float32 cosine can only ever be
-    certificate-checked."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.operators.similarity import int8_dot_topk
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    emb = TableRegistry(spark, sfd).embeddings
-    got = sorted(
-        tuple(r) for r in int8_dot_topk(emb, k=5, n_queries=8).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{os.path.join(sfd, 'embeddings.parquet')}'"
-    )
-    want = sorted(
-        (int(a), int(b), int(c), int(d), int(e))
-        for a, b, c, d, e in con.execute(_INT8_TOPK_ORACLE).fetchall()
-    )
-    assert got == want and len(got) == 8 * 5
-    # ranks are 1..5 per query, scores non-increasing in rank, and the
-    # quantized ranking is informative (not all-equal scores)
-    by_q: dict = {}
-    for qid, rnk, cid, dot, sm in got:
-        by_q.setdefault(qid, []).append((rnk, sm))
-    assert len(by_q) == 8
-    for qid, rows in by_q.items():
-        rows.sort()
-        assert [r for r, _ in rows] == [1, 2, 3, 4, 5]
-        sms = [s for _, s in rows]
-        assert sms == sorted(sms, reverse=True)
-    assert len({s for _, _, _, _, s in got}) > 1
 
 
 def test_int8_dot_topk_laws(spark):
@@ -3660,71 +2358,6 @@ def test_int8_dot_topk_agrees_with_float_cosine_ranking(spark):
     assert overlap >= 4 * len(qids), overlap
 
 
-def _leakage_split_oracle() -> str:
-    from datalake_nba_dmc_spark.operators.cdc import _M
-    from datalake_nba_dmc_spark.operators.hyperball import mixer_sql
-    from datalake_nba_dmc_spark.suite.dedup import _minhash_clusters_oracle
-
-    mix = mixer_sql(f"(((cluster_id % {_M}) + {_M}) % {_M})", "duck")
-    return f"""
-    SELECT doc_id, cluster_id,
-           CAST(({mix}) % 100 AS INTEGER) AS split_bucket,
-           CASE WHEN ({mix}) % 100 < 80 THEN 'train'
-                WHEN ({mix}) % 100 < 90 THEN 'val'
-                ELSE 'test' END AS split
-    FROM ({_minhash_clusters_oracle(16, 4, 3)}) c
-    """
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", SF01_SLOW])
-def test_leakage_safe_split_duckdb_twin(spark, sf):
-    """leakage_safe_split (r13-staged, registers r14 as
-    sample_leakage_safe_split): near-dup-aware train/val/test
-    assignment — split by the avalanche mixer of the LSH CLUSTER id,
-    so near-duplicates can never straddle an eval boundary. The DuckDB
-    twin replays the whole clusters pipeline (the registered
-    dedup_minhash_portable_clusters oracle) plus the same mixer split
-    — every assignment bit-exact; the no-leakage law and the ~80/10/10
-    proportions are asserted on the result."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.operators.portable_sketch import (
-        leakage_safe_split,
-    )
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    docs = TableRegistry(spark, sfd).documents
-    got = sorted(tuple(r) for r in leakage_safe_split(docs).collect())
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{os.path.join(sfd, 'documents.parquet')}'"
-    )
-    want = sorted(
-        (int(a), int(b), int(c), d)
-        for a, b, c, d in con.execute(_leakage_split_oracle()).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # no-leakage law: every cluster lives in exactly one split
-    pairs = {(c, s) for _, c, _, s in got}
-    assert len(pairs) == len({c for _, c, _, _ in got})
-    # all three splits populated, train the large one (80/10/10 bands)
-    counts: dict = {}
-    for _, _, _, s in got:
-        counts[s] = counts.get(s, 0) + 1
-    assert set(counts) == {"train", "val", "test"}
-    assert counts["train"] > counts["val"] and counts["train"] > counts["test"]
-    # the guard BITES: at least one multi-doc cluster exists (the
-    # corpus has near-dups), and its members share a split by the law
-    from collections import Counter
-
-    csize = Counter(c for _, c, _, _ in got)
-    assert any(n >= 2 for n in csize.values())
-
-
 def test_leakage_safe_split_laws(spark):
     """Empty/validation/duplication laws + the leakage scenario itself:
     two near-duplicate documents (one token edited) MUST land in the
@@ -3759,92 +2392,8 @@ def test_leakage_safe_split_laws(spark):
     assert one == two
 
 
-# --- r14-staged slate (registers r15): per-segment PSI, IVF-SQ8 recall,
-# eval-decontaminated split. Each twin runs at BOTH gate scales.
-
-_PSI_BY_ORACLE = """
-WITH base AS (
-  SELECT o_orderpriority AS seg,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS xs,
-         CASE WHEN o_orderdate < DATE '1998-01-01' THEN 1 ELSE 0 END AS ia
-  FROM orders
-  WHERE o_totalprice IS NOT NULL AND o_orderdate IS NOT NULL
-    AND o_orderpriority IS NOT NULL
-), c AS (
-  -- clamp BEFORE narrowing to INT: a corrupt outlier value puts the
-  -- raw FLOOR past 2^31 and an early cast would crash the oracle
-  -- where the operator clamps (psi_binned's standing comment)
-  SELECT seg,
-         CAST(LEAST(GREATEST(FLOOR((CAST(xs AS DOUBLE) / 100.0 - 0.0)
-                                    / 60000.0), 0), 9) AS INT) AS bucket,
-         ia
-  FROM base
-), g AS (
-  SELECT seg, bucket, CAST(SUM(ia) AS BIGINT) AS n_a,
-         CAST(SUM(1 - ia) AS BIGINT) AS n_b
-  FROM c GROUP BY seg, bucket
-), t AS (
-  SELECT seg, CAST(SUM(ia) AS BIGINT) AS ta,
-         CAST(COUNT(*) - SUM(ia) AS BIGINT) AS tb
-  FROM base GROUP BY seg
-)
-SELECT g.seg AS o_orderpriority, g.bucket, g.n_a, g.n_b,
-       round((g.n_a + 0.5) / (t.ta + 5.0), 6) AS share_a,
-       round((g.n_b + 0.5) / (t.tb + 5.0), 6) AS share_b,
-       round(((g.n_a + 0.5) / (t.ta + 5.0) - (g.n_b + 0.5) / (t.tb + 5.0))
-             * ln(((g.n_a + 0.5) / (t.ta + 5.0))
-                  / ((g.n_b + 0.5) / (t.tb + 5.0))), 6) AS psi_contrib
-FROM g JOIN t USING (seg)
-"""
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_psi_by_segment_duckdb_twin(spark, sf):
-    """psi_binned_by (r14-staged, registers r15 as stat_psi_by_segment
-    — VERDICT r13 ask #8): per-segment PSI over the same 10-bin
-    [0, 600k] grid as the registered global stat_psi_price_drift, on
-    the shared per-(segment, value) counts substrate. The twin replays
-    the scaled-grid bucketing, per-segment Laplace smoothing, and the
-    6-dp-rounded ln contributions — every row bit-exact."""
-    import duckdb as _duckdb
-
-    from pyspark.sql import functions as F
-
-    from datalake_nba_dmc_spark.operators.stats import psi_binned_by
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    orders = TableRegistry(spark, sfd).orders
-    got = sorted(
-        tuple(r)
-        for r in psi_binned_by(
-            orders,
-            "o_orderpriority",
-            F.col("o_orderdate") < F.lit("1998-01-01").cast("date"),
-            "o_totalprice",
-            lo=0.0,
-            hi=600000.0,
-            nbins=10,
-        ).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM '{os.path.join(sfd, 'orders.parquet')}'"
-    )
-    want = sorted(
-        (a, int(b), int(c), int(d), float(e), float(f), float(g))
-        for a, b, c, d, e, f, g in con.execute(_PSI_BY_ORACLE).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # all 5 segments report, buckets in range, shares in (0, 1)
-    segs = {r[0] for r in got}
-    assert len(segs) == 5
-    for _, b, n_a, n_b, sa, sb, _pc in got:
-        assert 0 <= b <= 9 and n_a >= 0 and n_b >= 0
-        assert 0.0 < sa < 1.0 and 0.0 < sb < 1.0
+# --- r15 registrations: per-segment PSI, IVF-SQ8 recall,
+# eval-decontaminated split, per-segment bootstrap, multi-horizon windows.
 
 
 def test_psi_by_segment_laws(spark):
@@ -3881,59 +2430,6 @@ def test_psi_by_segment_laws(spark):
         for r in psi_binned(df, split, "v", 0.0, 100.0, 10).collect()
     )
     assert by == g and len(by) == 10
-
-
-_IVF_SQ8_RECALL_ORACLE = """
-    SELECT DISTINCT vec_id AS query_id, 1 AS recall_ok
-    FROM embeddings WHERE vec_id IN (0, 1, 2)
-"""
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_ivf_sq8_recall_duckdb_twin(spark, sf):
-    """ivf_sq8_topk (r14-staged, registers r15 as sim_ivf_sq8_recall —
-    VERDICT r13 ask #6): IVF probe -> exact-int8 SQ8 shortlist ->
-    exact cosine re-rank, certified against the brute-force exact
-    top-10 with the same >=3-hit floor as the registered
-    sim_ivf_recall (the SQ8 stage only reorders WITHIN the probe
-    shortlist, and the exact re-rank scores cosine over the SAME
-    round(x*2^20) integer grid as the brute-force baseline —
-    REFINE_SCALE, r14 ADVICE — so both sides of the certificate use
-    one representation and near-ties cannot flip between them)."""
-    import duckdb as _duckdb
-
-    from pyspark.sql import functions as F
-
-    from datalake_nba_dmc_spark.operators.similarity import ivf_sq8_topk
-    from datalake_nba_dmc_spark.sources import TableRegistry
-    from datalake_nba_dmc_spark.suite.similarity import (
-        _recall_check,
-        sim_bruteforce_topk,
-    )
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    emb = TableRegistry(spark, sfd).embeddings
-    queries = emb.filter(F.col("vec_id").isin(0, 1, 2)).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    exact = sim_bruteforce_topk(spark, sfd)
-    approx = ivf_sq8_topk(emb, queries, k=10, n_centroids=16, n_probe=4)
-    got = sorted(
-        (r.query_id, r.recall_ok)
-        for r in _recall_check(approx, exact, floor=3).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{os.path.join(sfd, 'embeddings.parquet')}'"
-    )
-    want = sorted(
-        (int(a), int(b))
-        for a, b in con.execute(_IVF_SQ8_RECALL_ORACLE).fetchall()
-    )
-    assert got == want and len(got) == 3
 
 
 def test_ivf_sq8_topk_laws(spark):
@@ -3976,227 +2472,6 @@ def test_ivf_sq8_topk_laws(spark):
     assert got == [(1, 0), (2, 1), (3, 4), (4, 2), (5, 3)]
 
 
-def _eval_decon_split_oracle() -> str:
-    from datalake_nba_dmc_spark.operators.cdc import _M
-    from datalake_nba_dmc_spark.operators.hyperball import mixer_sql
-    from datalake_nba_dmc_spark.suite.dedup import (
-        _DUCK_SHINGLES,
-        _NORM,
-        _minhash_clusters_oracle,
-    )
-
-    mix = mixer_sql(f"(((cluster_id % {_M}) + {_M}) % {_M})", "duck")
-    clusters = _minhash_clusters_oracle(16, 4, 3, where="doc_id % 20 != 0")
-    return f"""
-    WITH sbase AS (
-      SELECT doc_id, cluster_id,
-             CASE WHEN ({mix}) % 100 < 80 THEN 'train'
-                  WHEN ({mix}) % 100 < 90 THEN 'val'
-                  ELSE 'test' END AS split
-      FROM ({clusters}) c
-    ), toks_t AS (
-      SELECT doc_id,
-             list_filter(string_split({_NORM}, ' '), x -> x != '') AS toks
-      FROM documents
-    ), sh AS (
-      SELECT doc_id, {_DUCK_SHINGLES} AS grams FROM toks_t
-    ), corpus_g AS (
-      SELECT doc_id, unnest(grams) AS gram FROM sh WHERE doc_id % 20 != 0
-    ), bench_g AS (
-      SELECT DISTINCT unnest(grams) AS gram FROM sh WHERE doc_id % 20 = 0
-    ), hits AS (
-      SELECT c.doc_id, CAST(COUNT(*) AS BIGINT) AS n_eval_hits
-      FROM corpus_g c JOIN bench_g b USING (gram)
-      GROUP BY c.doc_id
-    )
-    SELECT s.doc_id, s.cluster_id, s.split,
-           COALESCE(h.n_eval_hits, 0) AS n_eval_hits,
-           CASE WHEN s.split = 'train' AND COALESCE(h.n_eval_hits, 0) > 0
-                THEN 'quarantine' ELSE s.split END AS final_split
-    FROM sbase s LEFT JOIN hits h USING (doc_id)
-    """
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", SF01_SLOW])
-def test_eval_decontaminated_split_duckdb_twin(spark, sf):
-    """The leakage-safe split composed with benchmark decontamination
-    (r14-staged, registers r15 as sample_eval_decontaminated_split —
-    VERDICT r13 ask #7): the doc_id % 20 == 0 slice plays the EXTERNAL
-    eval table; corpus docs get the near-dup-cluster split, and any
-    TRAIN doc sharing a 3-gram with the eval table quarantines — so
-    train is clean of eval content by construction, in ADDITION to the
-    intra-corpus no-straddle guarantee. Spark runs the honest
-    two-stage screen (Bloom superset -> exact recheck on flagged docs
-    only; equality with exact-on-all holds by the no-false-negative
-    certificate); the twin replays clusters + mixer + the exact gram
-    join end to end."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.suite.dedup import (
-        sample_eval_decontaminated_split,
-    )
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    got = sorted(
-        tuple(r) for r in sample_eval_decontaminated_split(spark, sfd).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{os.path.join(sfd, 'documents.parquet')}'"
-    )
-    want = sorted(
-        (int(a), int(b), c, int(d), e)
-        for a, b, c, d, e in con.execute(_eval_decon_split_oracle()).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # the decontamination BITES: some train docs quarantined, some
-    # train docs survive clean
-    n_quar = sum(1 for r in got if r[4] == "quarantine")
-    n_train = sum(1 for r in got if r[4] == "train")
-    assert n_quar > 0 and n_train > 0
-    # the no-leakage law over the EXTERNAL eval set: no surviving train
-    # doc shares a gram with the eval table
-    assert all(r[3] == 0 for r in got if r[4] == "train")
-    # val/test assignments are untouched by decontamination
-    assert all(
-        r[2] == r[4] for r in got if r[2] in ("val", "test")
-    )
-    # and the intra-corpus law still holds at cluster grain for the
-    # SPLIT (pre-quarantine) assignment
-    pairs = {(r[1], r[2]) for r in got}
-    assert len(pairs) == len({r[1] for r in got})
-
-
-def test_staged_ops_layout_invariant(spark):
-    """Pre-empts the partition-perturbation audit for the CURRENT
-    staged slate (whatever suite/staged.py holds): bit-identical rows
-    under 3 vs 64 shuffle partitions."""
-    if not os.path.isdir(SF):
-        pytest.skip("driver testdata not present")
-    from datalake_nba_dmc_spark.suite.staged import staged_specs
-
-    specs = staged_specs()
-    if not specs:
-        pytest.skip("no staged specs at the moment (slate just registered)")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    results: dict[str, list] = {}
-    try:
-        for parts in (3, 64):
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            for name, spec in specs.items():
-                df = spec.builder(spark, SF)
-                rows = sorted(
-                    tuple(str(v) for v in r) for r in df.collect()
-                )
-                assert rows, name
-                results.setdefault(name, []).append(rows)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    for name, (r1, r2) in results.items():
-        assert r1 == r2, f"{name} is layout-dependent"
-
-
-def _bootstrap_by_oracle(
-    n_resamples: int, seed: int, scale: int, alpha_pct: int
-) -> str:
-    from datalake_nba_dmc_spark.operators.stats import (
-        _bootstrap_idbase_sql,
-        _bootstrap_weight_from_base_sql,
-    )
-
-    # staged id-mixer base (r16): identical integers to the composed
-    # bootstrap_weight_sql form (test_bootstrap_ci_duckdb_twin still
-    # pins the composed form at sf0.001), but DuckDB runs the id mixer
-    # once per row instead of once per (row, resample) — the sf0.1
-    # parametrization of this twin cost 274 s of the suite's budget
-    idb = _bootstrap_idbase_sql("o_orderkey", "duck")
-    w = _bootstrap_weight_from_base_sql("idb", "r", seed, "duck")
-    lo_rank = max(1, -(-n_resamples * alpha_pct // 200))
-    hi_rank = max(1, -(-n_resamples * (200 - alpha_pct) // 200))
-    return f"""
-    WITH base AS (
-      SELECT o_orderpriority AS seg, o_orderkey AS id, {idb} AS idb,
-             CAST(round(o_totalprice * {scale}) AS BIGINT) AS xs
-      FROM orders
-      WHERE o_totalprice IS NOT NULL AND o_orderkey IS NOT NULL
-        AND o_orderpriority IS NOT NULL
-    ), ex AS (
-      SELECT seg, idb, xs, unnest(range(0, {n_resamples})) AS r FROM base
-    ), wtab AS (
-      SELECT seg, r, {w} AS w, xs FROM ex
-    ), agg AS (
-      SELECT seg, r, CAST(SUM(w * xs) AS BIGINT) AS swx,
-             CAST(SUM(w) AS BIGINT) AS sw
-      FROM wtab GROUP BY seg, r
-    ), means AS (
-      SELECT seg, CASE WHEN sw > 0 THEN
-        CAST(floor(CAST(swx AS DOUBLE)
-                   / CAST(sw * {scale} AS DOUBLE) * 1000000.0) AS BIGINT)
-        ELSE 0 END AS mean_micro
-      FROM agg
-    ), srt AS (
-      SELECT seg, mean_micro,
-             ROW_NUMBER() OVER (PARTITION BY seg
-                                ORDER BY mean_micro) AS rk
-      FROM means
-    ), pt AS (
-      SELECT seg, CAST(floor(CAST(SUM(xs) AS DOUBLE)
-                  / CAST(COUNT(*) * {scale} AS DOUBLE) * 1000000.0)
-             AS BIGINT) AS point_micro
-      FROM base GROUP BY seg
-    )
-    SELECT pt.seg AS o_orderpriority,
-           CAST({n_resamples} AS BIGINT) AS n_resamples, pt.point_micro,
-           lo.mean_micro AS lo_micro, hi.mean_micro AS hi_micro
-    FROM pt
-    JOIN srt lo ON lo.seg = pt.seg AND lo.rk = {lo_rank}
-    JOIN srt hi ON hi.seg = pt.seg AND hi.rk = {hi_rank}
-    """
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", SF01_SLOW])
-def test_bootstrap_ci_by_segment_duckdb_twin(spark, sf):
-    """bootstrap_ci_mean_by (r14-staged, registers r15 as
-    stat_bootstrap_ci_by_segment): per-segment Poisson-bootstrap CI —
-    the twin replays every (id, r) weight, every per-segment resample
-    mean, and the per-segment nearest-rank cut bit-exactly (the
-    registered global stat_bootstrap_ci's contract, segmented)."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.operators.stats import bootstrap_ci_mean_by
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    orders = TableRegistry(spark, sfd).orders
-    got = sorted(
-        tuple(r)
-        for r in bootstrap_ci_mean_by(
-            orders, "o_orderpriority", "o_totalprice", "o_orderkey"
-        ).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM '{os.path.join(sfd, 'orders.parquet')}'"
-    )
-    want = sorted(
-        (a, int(b), int(c), int(d), int(e))
-        for a, b, c, d, e in con.execute(
-            _bootstrap_by_oracle(64, 42, 10**4, 5)
-        ).fetchall()
-    )
-    assert got == want and len(got) == 5
-    # interval sanity per segment: lo <= hi, point inside a sane band
-    for _, n, point, lo, hi in got:
-        assert n == 64 and lo <= hi
-        assert lo <= point <= hi or abs(point - lo) < abs(point) // 2
-
-
 def test_bootstrap_ci_by_segment_laws(spark):
     """Empty/validation; the single-segment REDUCTION law: restricted
     to one segment, the by-variant equals the registered global
@@ -4236,78 +2511,6 @@ def test_bootstrap_ci_by_segment_laws(spark):
         for r in bootstrap_ci_mean_by(shifted, "seg", "v", "id").collect()
     ]
     assert by2 == [(by[0][1],)]
-
-
-_TRAILING_MULTI_ORACLE = """
-WITH p AS (
-  SELECT user_id, ts AS pt, CAST(round(value * 100) AS BIGINT) AS v
-  FROM events
-  WHERE event_type = 'purchase' AND ts IS NOT NULL AND value IS NOT NULL
-), ev AS (
-  SELECT DISTINCT event_id, user_id, ts FROM events
-), feat AS (
-  SELECT e.event_id, e.user_id, e.ts,
-         CAST(COUNT(CASE WHEN p.pt > e.ts - INTERVAL 1 HOUR
-                         THEN 1 END) AS BIGINT) AS win_1h_count,
-         CAST(COALESCE(SUM(CASE WHEN p.pt > e.ts - INTERVAL 1 HOUR
-                                THEN p.v END), 0) AS BIGINT)
-           AS win_1h_sum_scaled,
-         CAST(COUNT(p.pt) AS BIGINT) AS win_24h_count,
-         CAST(COALESCE(SUM(p.v), 0) AS BIGINT) AS win_24h_sum_scaled
-  FROM ev e
-  LEFT JOIN p ON p.user_id = e.user_id
-             AND p.pt > e.ts - INTERVAL 24 HOUR AND p.pt <= e.ts
-  GROUP BY e.event_id, e.user_id, e.ts
-)
-SELECT f.event_id, f.user_id, f.ts, f.win_1h_count, f.win_1h_sum_scaled,
-       f.win_24h_count, f.win_24h_sum_scaled
-FROM events x
-JOIN feat f ON x.event_id IS NOT DISTINCT FROM f.event_id
-           AND x.user_id IS NOT DISTINCT FROM f.user_id
-           AND x.ts IS NOT DISTINCT FROM f.ts
-"""
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_trailing_windows_multi_duckdb_twin(spark, sf):
-    """trailing_window_agg_multi (r14-staged, registers r15 as
-    events_trailing_windows_multi): 1h + 24h horizons in ONE pass —
-    the cumulative table built once, one extra as-of per horizon (3
-    sorts for 2 windows, never a range join). The DuckDB twin
-    materializes ONE range join on the widest horizon and aggregates
-    each horizon conditionally — every count and sum bit-exact."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.suite.events import (
-        events_trailing_windows_multi,
-    )
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    got = sorted(
-        (r.event_id, r.user_id, str(r.ts), r.win_1h_count,
-         r.win_1h_sum_scaled, r.win_24h_count, r.win_24h_sum_scaled)
-        for r in events_trailing_windows_multi(spark, sfd).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{os.path.join(sfd, 'events.parquet')}'"
-    )
-    want = sorted(
-        (int(a), int(b), str(c), int(d), int(e), int(f), int(g))
-        for a, b, c, d, e, f, g in con.execute(
-            _TRAILING_MULTI_ORACLE
-        ).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # horizon-nesting law: the 24h window dominates the 1h window on
-    # every row, and both bite somewhere
-    assert all(c24 >= c1 and s24 >= s1 if s1 >= 0 else True
-               for _, _, _, c1, s1, c24, s24 in got)
-    assert any(c1 > 0 for _, _, _, c1, _, _, _ in got)
-    assert any(c24 > c1 for _, _, _, c1, _, c24, _ in got)
 
 
 def test_trailing_windows_multi_laws(spark):
@@ -4391,81 +2594,8 @@ def test_trailing_windows_multi_laws(spark):
     assert multi == single and len(multi) == 80
 
 
-# --- r15-staged slate (registers r16): trailing distinct count,
-# stratified leakage-safe split, per-segment drift panel. Each twin runs
-# at BOTH gate scales.
-
-_TRAILING_DISTINCT_ORACLE = """
-WITH p AS (
-  SELECT DISTINCT user_id,
-         CAST(CASE WHEN json_valid(props)
-                   THEN json_extract_string(props, '$.k') END AS BIGINT)
-           AS item,
-         ts
-  FROM events
-  WHERE event_type = 'purchase' AND user_id IS NOT NULL
-    AND ts IS NOT NULL
-    AND CAST(CASE WHEN json_valid(props)
-                  THEN json_extract_string(props, '$.k') END AS BIGINT)
-        IS NOT NULL
-), ev AS (
-  SELECT DISTINCT event_id, user_id, ts FROM events
-), feat AS (
-  SELECT e.event_id, e.user_id, e.ts,
-         CAST(COUNT(DISTINCT p.item) AS BIGINT) AS win_distinct
-  FROM ev e
-  LEFT JOIN p ON p.user_id = e.user_id
-             AND p.ts > e.ts - INTERVAL 24 HOUR AND p.ts <= e.ts
-  GROUP BY e.event_id, e.user_id, e.ts
-)
-SELECT f.event_id, f.user_id, f.ts, f.win_distinct
-FROM events x
-JOIN feat f ON x.event_id IS NOT DISTINCT FROM f.event_id
-           AND x.user_id IS NOT DISTINCT FROM f.user_id
-           AND x.ts IS NOT DISTINCT FROM f.ts
-"""
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_trailing_distinct_duckdb_twin(spark, sf):
-    """trailing_distinct_count (r15-staged, registers r16 as
-    events_trailing_distinct_items — VERDICT r14 ask #6): distinct
-    purchased items (props.k) per event in the trailing 24 h, EXACT,
-    via interval stabbing (each distinct (user, item, ts) occurrence
-    emits [max(prev_same_item_ts, ts-24h), ts) on the window-start
-    axis; the distinct count is the number of intervals containing
-    t-24h — one running sum + one as-of, never a range join). The twin
-    materializes the range join + COUNT(DISTINCT) definition,
-    duplication-proof (distinct-grain compute + null-safe per-row
-    fan-out — the r14 registration rule)."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.suite.staged import (
-        _events_trailing_distinct_items,
-    )
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    got = sorted(
-        (r.event_id, r.user_id, str(r.ts), r.win_distinct)
-        for r in _events_trailing_distinct_items(spark, sfd).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{os.path.join(sfd, 'events.parquet')}'"
-    )
-    want = sorted(
-        (int(a), int(b), str(c), int(d))
-        for a, b, c, d in con.execute(_TRAILING_DISTINCT_ORACLE).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # the distinct count BITES: some window holds >1 distinct item,
-    # and distinct <= plain trailing count everywhere (subset law
-    # rides the suite data via the registered multi-horizon query)
-    assert any(d > 1 for *_, d in got)
-    assert all(d >= 0 for *_, d in got)
+# --- the last registrations: trailing distinct count, stratified
+# leakage-safe split, per-segment drift panel.
 
 
 def test_trailing_distinct_laws(spark):
@@ -4532,81 +2662,6 @@ def test_trailing_distinct_laws(spark):
         ).collect()
     )
     assert doubled == out
-
-
-def _stratified_split_oracle() -> str:
-    from datalake_nba_dmc_spark.operators.cdc import _M
-    from datalake_nba_dmc_spark.operators.hyperball import mixer_sql
-    from datalake_nba_dmc_spark.suite.dedup import _minhash_clusters_oracle
-
-    mix = mixer_sql(f"(((cluster_id % {_M}) + {_M}) % {_M})", "duck")
-    clusters = _minhash_clusters_oracle(16, 4, 3)
-    return f"""
-    WITH cl AS ({clusters}), m AS (
-      SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_mass
-      FROM cl GROUP BY cluster_id
-    ), k AS (
-      SELECT cluster_id, cluster_mass, {mix} AS mixk FROM m
-    ), c AS (
-      SELECT cluster_id, cluster_mass,
-             CAST(SUM(cluster_mass) OVER (ORDER BY mixk, cluster_id
-                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-      FROM k
-    ), n AS (SELECT CAST(SUM(cluster_mass) AS BIGINT) AS nn FROM m)
-    SELECT cl.doc_id, cl.cluster_id, c.cluster_mass,
-           CASE WHEN 100 * (2 * (c.cum - c.cluster_mass) + c.cluster_mass)
-                     < 2 * n.nn * 80 THEN 'train'
-                WHEN 100 * (2 * (c.cum - c.cluster_mass) + c.cluster_mass)
-                     < 2 * n.nn * 90 THEN 'val'
-                ELSE 'test' END AS split
-    FROM cl JOIN c USING (cluster_id) CROSS JOIN n
-    """
-
-
-@needs_testdata
-@pytest.mark.slow
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_stratified_split_duckdb_twin(spark, sf):
-    """leakage_safe_split_stratified (r15-staged, registers r16 as
-    sample_stratified_split — VERDICT r14 ask #5): clusters laid on
-    the deterministic mixer line, bands cut by CUMULATIVE doc mass,
-    boundary clusters resolved by largest remainder (midpoint rule,
-    all int64). The twin replays the clusters closure + the global
-    running-mass window + the doubled-threshold CASE bit-exactly."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.suite.staged import _sample_stratified_split
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    got = sorted(
-        tuple(r) for r in _sample_stratified_split(spark, sfd).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{os.path.join(sfd, 'documents.parquet')}'"
-    )
-    want = sorted(
-        (int(a), int(b), int(c), d)
-        for a, b, c, d in con.execute(_stratified_split_oracle()).fetchall()
-    )
-    assert got == want and len(got) > 0
-    # no-leakage law at cluster grain + every split non-empty + the
-    # STRATIFICATION guarantee on the real corpus: doc-grain val/test
-    # proportions within half the largest cluster share (+1 doc) of
-    # the 10-pt targets
-    pairs = {(r[1], r[3]) for r in got}
-    assert len(pairs) == len({r[1] for r in got})
-    n = len(got)
-    from collections import Counter
-
-    shares = Counter(r[3] for r in got)
-    assert set(shares) == {"train", "val", "test"}
-    max_mass = max(r[2] for r in got)
-    tol = 100.0 * (max_mass / 2 + 1) / n
-    assert abs(100.0 * shares["val"] / n - 10.0) <= tol
-    assert abs(100.0 * shares["test"] / n - 10.0) <= tol
 
 
 def test_stratified_split_skew_law(spark):
@@ -4679,136 +2734,6 @@ def test_stratified_split_skew_law(spark):
     # validation
     with pytest.raises(ValueError, match="val_pct"):
         leakage_safe_split_stratified(docs, val_pct=60, test_pct=40)
-
-
-_DRIFT_PANEL_ORACLE = """
-WITH base AS (
-  SELECT o_orderpriority AS seg,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS xs,
-         CASE WHEN o_orderdate < DATE '1998-01-01' THEN 1 ELSE 0 END AS ia
-  FROM orders
-  WHERE o_totalprice IS NOT NULL AND o_orderdate IS NOT NULL
-    AND o_orderpriority IS NOT NULL
-), g AS (
-  SELECT seg, xs, CAST(SUM(ia) AS BIGINT) AS ca,
-         CAST(SUM(1 - ia) AS BIGINT) AS cb
-  FROM base GROUP BY seg, xs
-), c AS (
-  SELECT seg, xs, ca, cb,
-         CAST(SUM(ca) OVER w AS BIGINT) AS cuma,
-         CAST(SUM(cb) OVER w AS BIGINT) AS cumb,
-         CAST(SUM(ca + cb) OVER w AS BIGINT) AS cumall
-  FROM g
-  WINDOW w AS (PARTITION BY seg ORDER BY xs ROWS UNBOUNDED PRECEDING)
-), n AS (
-  SELECT seg, CAST(SUM(ca) AS BIGINT) AS n_a, CAST(SUM(cb) AS BIGINT) AS n_b
-  FROM g GROUP BY seg
-), ks AS (
-  SELECT n.seg,
-         CAST(MAX(ABS(c.cuma * n.n_b - c.cumb * n.n_a)) * 1000000
-              // GREATEST(n.n_a * n.n_b, 1) AS BIGINT) AS ks_d_micro
-  FROM c JOIN n ON c.seg = n.seg
-  GROUP BY n.seg, n.n_a, n.n_b
-), r AS (
-  SELECT seg, CAST(SUM(ca * (2 * (cumall - (ca + cb)) + (ca + cb) + 1))
-              AS BIGINT) AS r2a
-  FROM c GROUP BY seg
-), mw AS (
-  SELECT n.seg,
-         (r.r2a - n.n_a * (n.n_a + 1)) * 1000000
-           // GREATEST(2 * n.n_a * n.n_b, 1) AS auc_micro
-  FROM r JOIN n ON r.seg = n.seg
-), bins AS (
-  SELECT seg,
-         CAST(LEAST(GREATEST(FLOOR((CAST(xs AS DOUBLE) / 100.0 - 0.0)
-                                    / 60000.0), 0), 9) AS INT) AS bucket,
-         CAST(SUM(ca) AS BIGINT) AS bin_a, CAST(SUM(cb) AS BIGINT) AS bin_b
-  FROM g GROUP BY 1, 2
-), psi AS (
-  SELECT b.seg,
-         CAST(SUM(CAST(round(round(
-               ((b.bin_a + 0.5) / (n.n_a + 5.0)
-                - (b.bin_b + 0.5) / (n.n_b + 5.0))
-               * ln(((b.bin_a + 0.5) / (n.n_a + 5.0))
-                    / ((b.bin_b + 0.5) / (n.n_b + 5.0))), 6)
-               * 1000000.0) AS BIGINT)) AS BIGINT) AS psi_micro
-  FROM bins b JOIN n ON b.seg = n.seg
-  GROUP BY b.seg
-), probs AS (SELECT unnest([50, 90]) AS p_pct
-), qa AS (
-  SELECT c.seg, p.p_pct, c.xs
-  FROM c JOIN n ON c.seg = n.seg CROSS JOIN probs p
-  WHERE n.n_a > 0 AND c.cuma >= ((p.p_pct * n.n_a + 99) // 100)
-    AND c.cuma - c.ca < ((p.p_pct * n.n_a + 99) // 100)
-), qam AS (
-  SELECT seg, MAX(CASE WHEN p_pct = 50 THEN xs END) AS q50_a_scaled,
-         MAX(CASE WHEN p_pct = 90 THEN xs END) AS q90_a_scaled
-  FROM qa GROUP BY seg
-), qb AS (
-  SELECT c.seg, p.p_pct, c.xs
-  FROM c JOIN n ON c.seg = n.seg CROSS JOIN probs p
-  WHERE n.n_b > 0 AND c.cumb >= ((p.p_pct * n.n_b + 99) // 100)
-    AND c.cumb - c.cb < ((p.p_pct * n.n_b + 99) // 100)
-), qbm AS (
-  SELECT seg, MAX(CASE WHEN p_pct = 50 THEN xs END) AS q50_b_scaled,
-         MAX(CASE WHEN p_pct = 90 THEN xs END) AS q90_b_scaled
-  FROM qb GROUP BY seg
-)
-SELECT n.seg AS o_orderpriority, n.n_a, n.n_b, ks.ks_d_micro, mw.auc_micro,
-       psi.psi_micro,
-       qam.q50_a_scaled, qbm.q50_b_scaled,
-       qam.q50_a_scaled - qbm.q50_b_scaled AS q50_delta_scaled,
-       qam.q90_a_scaled, qbm.q90_b_scaled,
-       qam.q90_a_scaled - qbm.q90_b_scaled AS q90_delta_scaled
-FROM n
-JOIN ks ON n.seg = ks.seg
-JOIN mw ON n.seg = mw.seg
-LEFT JOIN psi ON n.seg = psi.seg
-LEFT JOIN qam ON n.seg = qam.seg
-LEFT JOIN qbm ON n.seg = qbm.seg
-"""
-
-
-@needs_testdata
-@pytest.mark.parametrize("sf", ["sf0.001", "sf0.1"])
-def test_drift_panel_duckdb_twin(spark, sf):
-    """drift_panel_by (r15-staged, registers r16 as
-    stat_drift_panel_by_segment — VERDICT r14 ask #7): the per-segment
-    drift DASHBOARD — exact KS, MW AUC, total PSI (micro), and p50/p90
-    per cohort with deltas — off ONE scan of orders (the counts frame
-    is checkpoint-materialized and every finisher reads it). The twin
-    recomputes all four families from one base CTE, every integer and
-    every 6-dp-rounded term bit-exact."""
-    import duckdb as _duckdb
-
-    from datalake_nba_dmc_spark.suite.staged import (
-        _stat_drift_panel_by_segment,
-    )
-
-    sfd = f"/root/testdata/{sf}"
-    if not os.path.isdir(sfd):
-        pytest.skip("scale dir missing")
-    got = sorted(
-        tuple(r) for r in _stat_drift_panel_by_segment(spark, sfd).collect()
-    )
-    con = _duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM '{os.path.join(sfd, 'orders.parquet')}'"
-    )
-    want = sorted(
-        tuple(
-            int(v) if v is not None and not isinstance(v, str) else v
-            for v in row
-        )
-        for row in con.execute(_DRIFT_PANEL_ORACLE).fetchall()
-    )
-    assert got == want and len(got) == 5
-    for row in got:
-        _, n_a, n_b, ks_m, auc_m, psi_m, *qs = row
-        assert n_a > 0 and n_b > 0
-        assert 0 <= ks_m <= 1_000_000 and 0 <= auc_m <= 1_000_000
-        assert psi_m >= 0
-        assert all(q is not None for q in qs)
 
 
 @needs_testdata

@@ -6,11 +6,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
-from datalake_nba_dmc_spark.sources import TABLES
 from datalake_nba_dmc_spark.suite import load_all
+from tools.verify_local import compare, oracle_connection
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -33,20 +32,7 @@ FAMILY = [
 
 @pytest.fixture(scope="module")
 def con():
-    c = duckdb.connect()
-    for t in TABLES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(SF0001, t + '.parquet')}'"
-        )
-    return c
-
-
-def canonical(df):
-    df = df[sorted(df.columns)]
-    return sorted(
-        "|".join("NULL" if v != v or v is None else str(v) for v in rec)
-        for rec in df.itertuples(index=False, name=None)
-    )
+    return oracle_connection(SF0001)
 
 
 @needs_testdata
@@ -55,8 +41,7 @@ def test_matches_oracle(spark, con, name):
     spec = load_all()[name]
     spdf = spec.builder(spark, SF0001).toPandas()
     odf = con.execute(spec.oracle).df()
-    assert sorted(spdf.columns) == sorted(odf.columns)
-    assert canonical(spdf) == canonical(odf)
+    assert compare(spdf, odf) == []
 
 
 @needs_testdata

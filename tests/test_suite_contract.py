@@ -168,37 +168,3 @@ def test_bench_final_line_fits_tail_window():
         "typical FINAL line must inline the full headline per-query dict"
     )
     assert len(typical) <= bench._FINAL_LINE_BUDGET - 100
-
-
-def test_staged_specs_disjoint_and_planned():
-    """Staged specs (suite/staged.py) must never leak into the driver's
-    registry, and must exactly match the r16 slate (the audit batteries
-    run over precisely these names). The 5-op r14 slate registered in
-    r15 — those names now live in the registry with oracles."""
-    from datalake_nba_dmc_spark.suite import load_all
-    from datalake_nba_dmc_spark.suite.staged import staged_specs
-
-    registered = set(load_all())
-    staged = staged_specs()
-    assert set(staged) == _R16_SLATE
-    assert {
-        "stat_psi_by_segment",
-        "sim_ivf_sq8_recall",
-        "sample_eval_decontaminated_split",
-        "stat_bootstrap_ci_by_segment",
-        "events_trailing_windows_multi",
-    } <= registered
-    assert not (set(staged) & registered)
-    # the audit view appends them; the driver view must not contain them
-    with_staged = load_all(include_staged=True)
-    assert set(with_staged) == registered | set(staged)
-    for spec in staged.values():
-        assert spec.oracle is None and callable(spec.builder)
-
-
-#: The planned r16 registration slate (updated as this round stages ops).
-_R16_SLATE: set[str] = {
-    "events_trailing_distinct_items",
-    "sample_stratified_split",
-    "stat_drift_panel_by_segment",
-}

@@ -47,7 +47,7 @@ def main() -> None:
         # "plan written" — default the tag instead of lying
         args.tag = "plan"
 
-    specs = load_all(include_staged=True)
+    specs = load_all()
     spark = get_spark("perf_probe")
     plans_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

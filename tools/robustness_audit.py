@@ -921,7 +921,7 @@ def partitions_audit(only: set[str]) -> int:
     from datalake_nba_dmc_spark.suite import load_all
     from tools.verify_local import canonical_hash
 
-    specs = load_all(include_staged=True)
+    specs = load_all()
     spark = get_spark("robustness_partitions")
     n_pass = n_fail = n_crash = n_known = 0
     failures: list[str] = []
@@ -1091,7 +1091,7 @@ def retry_audit(only: set[str]) -> int:
         print("CONF-INEFFECTIVE: retry injection canary failed")
         return 1
 
-    specs = load_all(include_staged=True)
+    specs = load_all()
     n_pass = n_fail = n_crash = n_known = 0
     failures: list[str] = []
     for name, spec in sorted(specs.items()):
@@ -1149,7 +1149,7 @@ def codegen_audit(only: set[str]) -> int:
     from datalake_nba_dmc_spark.suite import load_all
     from tools.verify_local import canonical_hash
 
-    specs = load_all(include_staged=True)
+    specs = load_all()
     spark = get_spark("robustness_codegen")
     n_pass = n_fail = n_crash = n_known = 0
     failures: list[str] = []
@@ -1243,7 +1243,7 @@ def spill_audit(only: set[str]) -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
-    specs = load_all(include_staged=True)
+    specs = load_all()
     n_pass = n_fail = n_crash = n_known = 0
     failures: list[str] = []
     for name, spec in sorted(specs.items()):
@@ -1448,21 +1448,13 @@ def main() -> int:
     only = set(sys.argv[2:])
     sf_dir = build_mutated(mode)
 
-    import duckdb
-    import pandas as pd  # noqa: F401  (verify_local.canonical_hash uses pd)
-
     from datalake_nba_dmc_spark.session import get_spark
-    from datalake_nba_dmc_spark.sources import TABLES
     from datalake_nba_dmc_spark.suite import load_all
-    from tools.verify_local import canonical_hash
+    from tools.verify_local import compare, oracle_connection
 
-    specs = load_all(include_staged=True)
+    specs = load_all()
     spark = get_spark(f"robustness_{mode}")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(sf_dir, t + '.parquet')}'"
-        )
+    con = oracle_connection(sf_dir)
 
     known = {
         "empty": KNOWN_EMPTY,
@@ -1510,15 +1502,7 @@ def main() -> int:
             n_crash += 1
             failures.append(name)
             continue
-        problems = []
-        if len(spdf) != len(odf):
-            problems.append(f"rows {len(spdf)} vs {len(odf)}")
-        if sorted(spdf.columns) != sorted(odf.columns):
-            problems.append(f"cols {sorted(spdf.columns)} vs {sorted(odf.columns)}")
-        elif not problems:
-            hs, ho = canonical_hash(spdf), canonical_hash(odf)
-            if hs != ho:
-                problems.append(f"hash {hs} vs {ho}")
+        problems = compare(spdf, odf)
         if problems:
             print(f"FAIL {name}: {'; '.join(problems)}")
             n_fail += 1

@@ -24,6 +24,16 @@ from datalake_nba_dmc_spark.sources import TABLES
 from datalake_nba_dmc_spark.suite import load_all
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per suite table over ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(sf_dir, t + '.parquet')}'"
+        )
+    return con
+
+
 def canonical_hash(df: pd.DataFrame) -> str:
     """Order-insensitive value hash: sort columns by name, normalize cell
     repr, sort rows, sha256."""
@@ -44,17 +54,45 @@ def canonical_hash(df: pd.DataFrame) -> str:
     return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
 
 
+def compare(spdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """The differential check: row count, column names, and the
+    order-insensitive value hash (plus the first differing cell when the
+    row counts agree). Returns the problems found; empty means PASS."""
+    problems = []
+    if len(spdf) != len(odf):
+        problems.append(f"rows {len(spdf)} vs {len(odf)}")
+    cols = sorted(spdf.columns)
+    if cols != sorted(odf.columns):
+        problems.append(f"cols {cols} vs {sorted(odf.columns)}")
+        return problems
+    hs, ho = canonical_hash(spdf), canonical_hash(odf)
+    if hs == ho:
+        return problems
+    problems.append(f"hash {hs} vs {ho}")
+    if len(spdf) == len(odf):
+        try:
+            s, o = (
+                df[cols].sort_values(cols).reset_index(drop=True).astype(str)
+                for df in (spdf, odf)
+            )
+        except TypeError:  # unorderable cells (lists, mixed types)
+            return problems
+        for col in cols:
+            if not s[col].equals(o[col]):
+                ex = (s[col] != o[col]).idxmax()
+                problems.append(
+                    f"first diff col={col} row={ex}: {s[col][ex]!r} vs {o[col][ex]!r}"
+                )
+                break
+    return problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     specs = load_all()
     spark = get_spark("verify_local")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(sf_dir, t + '.parquet')}'"
-        )
+    con = oracle_connection(sf_dir)
 
     n_pass = n_fail = n_rows_only = 0
     for name, spec in sorted(specs.items()):
@@ -79,32 +117,7 @@ def main() -> int:
             traceback.print_exc(limit=3)
             n_fail += 1
             continue
-        problems = []
-        if len(spdf) != len(odf):
-            problems.append(f"rows {len(spdf)} vs {len(odf)}")
-        if sorted(spdf.columns) != sorted(odf.columns):
-            problems.append(f"cols {sorted(spdf.columns)} vs {sorted(odf.columns)}")
-        else:
-            hs, ho = canonical_hash(spdf), canonical_hash(odf)
-            if hs != ho:
-                problems.append(f"hash {hs} vs {ho}")
-                merged = spdf[sorted(spdf.columns)].sort_values(
-                    sorted(spdf.columns)
-                ).reset_index(drop=True)
-                omerged = odf[sorted(odf.columns)].sort_values(
-                    sorted(odf.columns)
-                ).reset_index(drop=True)
-                if len(merged) == len(omerged):
-                    for col in merged.columns:
-                        if not merged[col].astype(str).equals(omerged[col].astype(str)):
-                            ex = (
-                                merged[col].astype(str) != omerged[col].astype(str)
-                            ).idxmax()
-                            problems.append(
-                                f"first diff col={col} row={ex}: "
-                                f"{merged[col][ex]!r} vs {omerged[col][ex]!r}"
-                            )
-                            break
+        problems = compare(spdf, odf)
         if problems:
             print(f"FAIL {name}: {'; '.join(problems)}")
             n_fail += 1
