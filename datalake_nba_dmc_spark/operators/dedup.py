@@ -187,64 +187,6 @@ def minhash_lsh_candidates(
     )
 
 
-def minhash_signature_arrow(num_hashes: int = 32, seed: int = 42):
-    """Vectorized minhash signature as an Arrow-batched Pandas UDF over the
-    per-shingle hash array (`array<long>` of xxhash64 % P, computed
-    JVM-side so no strings cross the Python boundary).
-
-    Kept as the tested-identical alternative for environments where the
-    expression fold regresses; NO LONGER the default. Receipt history:
-    before the single-`aggregate`-fold rewrite of
-    :func:`minhash_signature`, this numpy path measured 2× faster than K
-    separate expression evaluations; re-measured in r6 AFTER that rewrite
-    the Python-free fold wins — 0.129 s vs 0.288 s signature-only and
-    0.69 s vs 1.05 s full-pipeline at sf0.1, identical signatures — so
-    the default is the codegen path and this stays as the fallback."""
-    import random
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    rng = random.Random(seed)
-    coeffs = [(rng.randrange(1, _MERSENNE31), rng.randrange(0, _MERSENNE31)) for _ in range(num_hashes)]
-    a = np.array([c[0] for c in coeffs], dtype=np.int64)
-    b = np.array([c[1] for c in coeffs], dtype=np.int64)
-
-    # Chunked batch reduction (same shape as simhash_arrow): concatenate a
-    # chunk of rows and take per-row minima with ONE np.minimum.reduceat
-    # instead of allocating a (shingles × K) matrix per row.
-    chunk_rows = 512
-
-    @pandas_udf(ArrayType(LongType()))
-    def sig(hash_arrays: pd.Series) -> pd.Series:
-        n = len(hash_arrays)
-        zero = np.zeros(1, dtype=np.int64)
-        # shingle arrays are non-empty by construction (whole-text
-        # fallback); defensive zero-pad keeps reduceat well-defined anyway
-        arrs = [
-            np.asarray(h, dtype=np.int64) if len(h) else zero for h in hash_arrays
-        ]
-        lens = np.fromiter((len(x) for x in arrs), dtype=np.int64, count=n)
-        out: list[np.ndarray] = []
-        for s in range(0, n, chunk_rows):
-            cl = lens[s : s + chunk_rows]
-            flat = np.concatenate(arrs[s : s + chunk_rows])
-            mins = np.minimum.reduceat(
-                (flat[:, None] * a[None, :] + b[None, :]) % _MERSENNE31,
-                np.concatenate([zero[:1], np.cumsum(cl[:-1])]),
-                axis=0,
-            )
-            out.extend(mins)
-        return pd.Series(out)
-
-    return sig
-
-
-def shingle_hashes(sh_col: Column) -> Column:
-    """Per-shingle 64-bit hash array reduced mod P (JVM-side)."""
-    return F.transform(sh_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE31)))
-
-
 def minhash_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -254,7 +196,6 @@ def minhash_dedup(
     shingle_n: int = 3,
     threshold: float = 0.5,
     seed: int = 42,
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle once, persist, band,
     bucket-join, verify candidates with exact Jaccard ≥ ``threshold``.
@@ -269,17 +210,13 @@ def minhash_dedup(
         with_shingles(df.select(id_col, text_col), text_col, shingle_n)
         # NULL shingle arrays (token-less docs) form no candidates and would
         # otherwise collide into one per-band bucket (xxhash64 skips NULL
-        # args) — and the Arrow signature path would crash on a None array.
-        # Same guard as minhash_lsh_candidates; exact_dedup owns empty docs.
+        # args). Same guard as minhash_lsh_candidates; exact_dedup owns empty docs.
         .filter(F.col("sh").isNotNull())
         .select(id_col, "sh")
     )
     sh_df.persist()
     rows_per_band = num_hashes // bands
-    if use_arrow:
-        sig = minhash_signature_arrow(num_hashes, seed)(shingle_hashes(F.col("sh")))
-    else:
-        sig = minhash_signature(F.col("sh"), num_hashes, seed)
+    sig = minhash_signature(F.col("sh"), num_hashes, seed)
     banded = (
         sh_df.select(F.col(id_col), sig.alias("sig"))
         .select(
@@ -583,7 +520,7 @@ def simhash_arrow(bits: int = 64):
     boundary). numpy unpacks each row's hashes into a (tokens × bits) sign
     matrix and reduces it in C; the 64 interpreted per-bit vote folds of
     :func:`_simhash_from_hashes` don't codegen and lose by ~10×. Bit-for-bit
-    identical output to the expression path (test_dedup covers both)."""
+    identical output to :func:`simhash` (pinned in test_dedup)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
@@ -601,9 +538,9 @@ def simhash_arrow(bits: int = 64):
         zero = np.zeros(1, dtype=np.int64)
         # empty docs are padded with one zero hash: its votes are all -1,
         # so the fingerprint is 0 — identical to the unpadded per-row math.
-        # NULL token arrays (NULL text) get the same pad: the expression
-        # path's NULL vote falls through otherwise(0) to fingerprint 0,
-        # and the two paths are pinned bit-identical (robustness_audit
+        # NULL token arrays (NULL text) get the same pad: the reference
+        # simhash()'s NULL vote falls through otherwise(0) to fingerprint
+        # 0, and the two are pinned bit-identical (robustness_audit
         # `nulls` finding — this was a worker TypeError on None)
         arrs = [
             np.asarray(h, dtype=np.int64) if h is not None and len(h) else zero
@@ -632,23 +569,17 @@ def with_simhash(
     text_col: str = "text",
     out: str = "sh",
     bits: int = 64,
-    use_arrow: bool = True,
     drop_empty: bool = False,
 ) -> DataFrame:
     """Staged SimHash: normalize+tokenize+hash runs once per row in its own
     projection; the vote reduction then reads a column attribute instead of
     recomputing the array (same staging rationale as :func:`with_shingles`).
-    Default path is the Arrow-vectorized reducer — a nuanced r6
-    measurement: the PROJECTION alone is faster as expressions (0.31 s vs
-    0.41 s at sf0.1), but the full ``simhash_near_dups`` pipeline is
-    faster with Arrow (0.96 s vs 1.15 s): the fingerprint feeds the
-    16-bit banding fan-out, and interpreted higher-order-function
-    expressions get no common-subexpression elimination there — the vote
-    reduction re-evaluates per band reference — while the Arrow UDF
-    column materializes once. (MinHash went the OTHER way: its full
-    pipeline is faster pure-expression; each family's default is its
-    measured full-pipeline winner.) ``use_arrow=False`` keeps the plan
-    Python-free.
+    The vote reduction is the Arrow-vectorized :func:`simhash_arrow`: the
+    fingerprint feeds the 16-bit banding fan-out, where interpreted
+    higher-order-function expressions get no common-subexpression
+    elimination (the vote reduction would re-evaluate per band
+    reference), while the Arrow UDF column materializes once.
+    :func:`simhash` is the bit-identical expression reference.
 
     ``drop_empty=True`` removes content-less docs (NULL / empty /
     whitespace-only text) BEFORE the vote reduction: their fingerprint is
@@ -679,11 +610,9 @@ def with_simhash(
     staged = staged.withColumn(
         "_tok_hashes", F.transform(toks, lambda t: F.xxhash64(t))
     )
-    if use_arrow:
-        reduced = staged.withColumn(out, simhash_arrow(bits)(F.col("_tok_hashes")))
-    else:
-        reduced = staged.withColumn(out, _simhash_from_hashes(F.col("_tok_hashes"), bits))
-    return reduced.drop("_tok_hashes")
+    return staged.withColumn(out, simhash_arrow(bits)(F.col("_tok_hashes"))).drop(
+        "_tok_hashes"
+    )
 
 
 def hamming64(a: Column, b: Column) -> Column:

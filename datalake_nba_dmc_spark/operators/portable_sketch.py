@@ -24,18 +24,15 @@ codepoint arithmetic identical across JVM UTF-16 and DuckDB UTF-8.
 Scale shape: identical to the production path — one map-only shingle +
 fold projection (the ONE-fold-updating-K-minima shape; K separate
 ``array_min(transform(...))`` re-evaluated the shingle array K times,
-measured 30× at 50 k docs), state K small ints per doc. Suite
+measured 30× at 50 k docs), state K small ints per doc. The suite
 registrations (``dedup_minhash_portable``, ``dedup_simhash_portable``)
-are staged for the next round per the registry freeze;
-tests/test_staged_oracles.py carries both DuckDB twins.
+carry the DuckDB oracles.
 """
 
 from __future__ import annotations
 
 import random
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -61,149 +58,16 @@ def permutation_coeffs(
     ]
 
 
-#: 2^31 — the mixer-input modulus shared with operators/cdc (kept as a
-#: local literal so numpy code below reads mask-style).
+#: 2^31 — the mixer-input modulus shared with operators/cdc.
 _M31 = 2_147_483_648
-
-
-def _mixer_np(x: np.ndarray) -> np.ndarray:
-    """The 32-bit avalanche mixer (operators/hyperball.mixer_sql),
-    vectorized: identical integer-by-integer to the dialect-rendered SQL
-    (three shift-xors, two multiplies mod 2^32 — products stay < 2^59,
-    no uint64 wrap)."""
-    mask = np.uint64(0xFFFFFFFF)
-    c = np.uint64(73244475)
-    s16 = np.uint64(16)
-    h = (np.asarray(x, dtype=np.uint64)) & mask
-    h = ((h ^ (h >> s16)) * c) & mask
-    h = ((h ^ (h >> s16)) * c) & mask
-    h = h ^ (h >> s16)
-    return h.astype(np.int64)
-
-
-def _token_sums_np(strings: list[str]):
-    """Per-string (position-weighted codepoint sum, plain codepoint sum,
-    length) for ASCII-contract strings — one concatenated byte buffer,
-    two np.add.reduceat calls, no per-string Python loop (beyond the
-    single join/encode)."""
-    n = len(strings)
-    ln = np.fromiter((len(t) for t in strings), dtype=np.int64, count=n)
-    if n == 0 or int(ln.sum()) == 0:
-        z = np.zeros(n, dtype=np.int64)
-        return z, z.copy(), ln
-    flat = np.frombuffer("".join(strings).encode("ascii"), dtype=np.uint8).astype(np.int64)
-    starts = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(ln)[:-1]])
-    weights = np.arange(flat.size, dtype=np.int64) - np.repeat(starts, ln) + 1
-    pw = np.add.reduceat(flat * weights, starts)
-    ps = np.add.reduceat(flat, starts)
-    empty = ln == 0
-    if empty.any():
-        # reduceat on a zero-length segment reads the next element
-        pw = np.where(empty, 0, pw)
-        ps = np.where(empty, 0, ps)
-    return pw, ps, ln
-
-
-def minhash_portable_arrow(
-    num_hashes: int = 16, shingle_n: int = 3, seed: int = 42
-):
-    """Arrow-vectorized path of :func:`minhash_portable`, computing the
-    SAME integers as the expression fold — but from the TOKEN arrays,
-    never materializing shingle strings on either side of the boundary.
-
-    The profile that motivated this shape (sf0.1, local[32]): the JVM
-    shingle build (`transform` + `slice` + `concat_ws` per window) alone
-    costs 3.6 s and triples the bytes crossing the Arrow boundary (each
-    char rides in ~3 shingles). Instead, the position-weighted codepoint
-    sum of a shingle
-    ``t_w ' ' t_{w+1} … `` decomposes over per-token sums:
-
-        pw(shingle) = Σ_j [pw(t_j) + o_j·ps(t_j)] + 32·Σ_{j>w} o_j
-
-    with ``o_j`` the token's char offset inside the shingle (prefix sums
-    of len+1). Every window's sum is then a difference of four prefix-sum
-    arrays over the flat token stream — O(total tokens) numpy work, and
-    only the raw tokens (1× corpus bytes) are shipped. Duplicate windows
-    need no array_distinct: min is idempotent, so multiset minima equal
-    the expression path's set minima. Docs with 1..n-1 tokens contribute
-    their single whole-text window (the _grams_from_tokens fallback).
-    Value-identity with the expression fold is pinned corpus-wide by
-    tests/test_staged_oracles.py::test_minhash_portable_arrow_matches_expression
-    (see minhash_portable's docstring for the measured A/B receipts —
-    comparable at sf0.1, ~20% ahead on 2.5 KB docs, worse first-pass)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    coeffs = permutation_coeffs(num_hashes, seed)
-    a = np.array([c[0] for c in coeffs], dtype=np.int64)
-    b = np.array([c[1] for c in coeffs], dtype=np.int64)
-    n = shingle_n
-    chunk_rows = 2048
-
-    @pandas_udf(ArrayType(LongType()))
-    def sig(toks: pd.Series) -> pd.Series:
-        out: list[np.ndarray] = []
-        for s0 in range(0, len(toks), chunk_rows):
-            chunk = toks.iloc[s0 : s0 + chunk_rows]
-            lists = [list(x) for x in chunk]
-            cl = np.fromiter(
-                (len(x) for x in lists), dtype=np.int64, count=len(lists)
-            )
-            flat_tokens = [t for x in lists for t in x]
-            pw, ps, ln = _token_sums_np(flat_tokens)
-            # elementwise mod keeps every later product/cumsum < 2^63
-            pw %= _M31
-            ps %= _M31
-            cume = np.concatenate(
-                [np.zeros(1, dtype=np.int64), np.cumsum(ln + 1)[:-1]]
-            )
-            zero = np.zeros(1, dtype=np.int64)
-            P1 = np.concatenate([zero, np.cumsum(pw)])
-            P2 = np.concatenate([zero, np.cumsum((cume % _M31) * ps % _M31)])
-            P3 = np.concatenate([zero, np.cumsum(ps)])
-            P4 = np.concatenate([zero, np.cumsum(cume % _M31)])
-            # windows: cl >= n rows get cl-n+1 n-grams; 1..n-1 token rows
-            # get their single whole-text window (callers filter cl == 0)
-            w_cnt = np.where(cl >= n, cl - n + 1, np.minimum(cl, 1))
-            win_len = np.where(cl >= n, n, cl)
-            rs = np.concatenate([zero, np.cumsum(cl)[:-1]])
-            wrs = np.concatenate([zero, np.cumsum(w_cnt)[:-1]])
-            W = int(w_cnt.sum())
-            base = np.repeat(rs, w_cnt)
-            within = np.arange(W, dtype=np.int64) - np.repeat(wrs, w_cnt)
-            wstart = base + within
-            wlen = np.repeat(win_len, w_cnt)
-            wend1 = wstart + wlen  # exclusive end, index into P*
-            cw = cume[wstart] % _M31
-            A = P1[wend1] - P1[wstart]
-            B = P2[wend1] - P2[wstart]
-            C = (P3[wend1] - P3[wstart]) % _M31
-            D = (P4[wend1] - P4[wstart + 1]) % _M31
-            # reduce the space term before the *32: D and cw are < 2^31,
-            # so the raw difference times 32 could reach 2^67
-            spaces = (D - ((wlen - 1) % _M31) * cw) % _M31
-            total = (A + B - cw * C + 32 * spaces) % _M31
-            h = _mixer_np(total) % _MERSENNE31
-            mins = np.minimum.reduceat(
-                (h[:, None] * a[None, :] + b[None, :]) % _MERSENNE31,
-                wrs,
-                axis=0,
-            )
-            if (w_cnt == 0).any():
-                mins[w_cnt == 0] = _MERSENNE31
-            out.extend(mins)
-        return pd.Series(out)
-
-    return sig
 
 
 def _shingle_hashes_expr(toks: str, n: int) -> str:
     """Spark-side shingle-hash ARRAY for a token-array column, via the
-    TOKEN-SUM DECOMPOSITION (r16 — the arrow path's math as pure SQL):
-    per-token character folds run ONCE (``_tsum``: position-weighted sum
-    ``pw`` and plain sum ``ps`` in one struct fold; ``_ln``: lengths),
-    then each word-n-gram window's joined-string sum is rebuilt by an
-    O(n) integer fold —
+    TOKEN-SUM DECOMPOSITION (r16): per-token character folds run ONCE
+    (``_tsum``: position-weighted sum ``pw`` and plain sum ``ps`` in one
+    struct fold; ``_ln``: lengths), then each word-n-gram window's
+    joined-string sum is rebuilt by an O(n) integer fold —
 
         Σ_i [ pw_i + off_i · (ps_i + 32) ],  off_1 = 0,
         off_{i+1} = off_i + len_i + 1        (the ' ' separator)
@@ -216,7 +80,7 @@ def _shingle_hashes_expr(toks: str, n: int) -> str:
     tests/test_staged_oracles.py. Docs with 1..n-1 tokens get their
     single whole-text window (the ``_grams_from_tokens`` fallback);
     windows are a MULTISET (no array_distinct — min-fold consumers are
-    idempotent, the arrow path's argument). Why: the old shape
+    idempotent, so multiset minima equal set minima). Why: the old shape
     materialized every shingle STRING (~3× corpus bytes) and re-folded
     every character ~3×n more times inside ``token_hash_sql``'s 8×
     textual self-reference — measured 4.81 → 0.39 s (12×) for the
@@ -271,7 +135,6 @@ def _minhash_portable_sig(
     num_hashes: int,
     shingle_n: int,
     seed: int,
-    use_arrow: bool,
 ) -> DataFrame:
     """(``id_col``, _sig array<long>) — the shared signature frame behind
     :func:`minhash_portable` (exploded rows) and
@@ -284,20 +147,6 @@ def _minhash_portable_sig(
         )
     ).withColumn("_toks", toks)
 
-    if use_arrow:
-        # the arrow path consumes raw TOKENS (1x corpus bytes) and
-        # reconstructs shingle hashes from per-token sums. Emptiness is
-        # filtered on the TOKEN array: for non-null token arrays
-        # size(_sh) > 0 iff size(_toks) > 0 (_grams_from_tokens emits the
-        # whole-text window for 1..n-1 tokens), and building _sh here
-        # would materialize every shingle string in the JVM — exactly the
-        # 3x-bytes cost this path exists to avoid (r11 ADVICE finding)
-        return base.filter(F.size("_toks") > 0).select(
-            id_col,
-            minhash_portable_arrow(num_hashes, shingle_n, seed)(
-                F.col("_toks")
-            ).alias("_sig"),
-        )
     coeffs = permutation_coeffs(num_hashes, seed)
     a_arr = F.array(*[F.lit(a) for a, _ in coeffs])
     b_arr = F.array(*[F.lit(b) for _, b in coeffs])
@@ -306,8 +155,9 @@ def _minhash_portable_sig(
     # strings, one character fold per token (see _shingle_hashes_expr;
     # 12× on the sf0.1 fold, bit-identical, equality pinned corpus-wide
     # in tests/test_staged_oracles.py). Emptiness filters on the TOKEN
-    # array (same rows: _sh nonempty iff _toks nonempty — the arrow
-    # path's rule). Staged hashes as their own column (with_shingles).
+    # array (same rows: _sh nonempty iff _toks nonempty, since
+    # _grams_from_tokens emits the whole-text window for 1..n-1 tokens).
+    # Staged hashes as their own column (with_shingles).
     hashed = _with_token_sums(
         base.filter(F.size("_toks") > 0)
     ).withColumn("_shh", F.expr(_shingle_hashes_expr("_toks", shingle_n)))
@@ -335,28 +185,14 @@ def minhash_portable(
     num_hashes: int = 16,
     shingle_n: int = 3,
     seed: int = 42,
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Portable MinHash signatures: one row per (``id_col``, h_idx,
     sig_value) for every ASCII-contract document with >= ``shingle_n``
     tokens. ``sig_value`` = min over the doc's word shingles of
     ``(a_i · mixer_hash(shingle) + b_i) mod P`` — every value bit-exact
-    vs the DuckDB twin.
-
-    Two value-identical execution paths (equality-pinned corpus-wide in
-    tests/test_staged_oracles.py). Default = the Python-free expression
-    fold (the formulation the DuckDB twin replays). ``use_arrow=True``
-    reconstructs the same integers from per-token sums in numpy —
-    measured receipts (local[32]): sf0.1 interleaved A/B 4.10 vs 4.37 s
-    (band), 2.5 KB-doc microbench 9.6 vs 11.9 s steady but a ~3x worse
-    first evaluation (Python worker spin-up). Kept as the
-    tested-identical alternative (the minhash_signature_arrow
-    precedent): its real advantage is shipping 1x corpus bytes across
-    any boundary instead of 3x materialized shingles, which matters
-    when document length, not row count, dominates."""
-    sig = _minhash_portable_sig(
-        df, text_col, id_col, num_hashes, shingle_n, seed, use_arrow
-    )
+    vs the DuckDB twin, which replays the same Python-free expression
+    fold."""
+    sig = _minhash_portable_sig(df, text_col, id_col, num_hashes, shingle_n, seed)
     return sig.select(
         id_col, F.posexplode("_sig").alias("h_idx", "sig_value")
     ).select(
@@ -601,7 +437,7 @@ def minhash_portable_clusters(
         raise ValueError("bands must divide num_hashes")
     rows_per_band = num_hashes // bands
     sig = _minhash_portable_sig(
-        df, text_col, id_col, num_hashes, shingle_n, seed, use_arrow=False
+        df, text_col, id_col, num_hashes, shingle_n, seed
     ).persist()
     # band keys sliced straight off the signature ARRAY — map-only, no
     # re-aggregation of exploded rows (the first cut grouped 

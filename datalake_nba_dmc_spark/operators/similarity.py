@@ -313,7 +313,7 @@ def nearest_centroids(vec_col: Column, centers: list[list[float]], n_probe: int)
     (``repr`` round-trips every double exactly; the D suffix parses it
     straight to DOUBLE) instead of dim-many ``F.lit`` Column objects —
     at k=16/dim=64 the old form made ~1k driver round-trips per plan
-    build, the dominant cost of the REBUILD-billed recall certificates
+    build, the dominant builder cost of the recall certificates
     (r16; values unchanged, same zip_with/aggregate fold)."""
     scored = [
         F.struct(
@@ -1094,8 +1094,7 @@ def _semantic_edges(
         # cosine as a dense matmul). The first cut self-joined the
         # cluster on its key and filtered an interpreted HOF cosine per
         # PAIR: ~80 µs × Σ|cluster|²/2 pairs put a hidden ~12 s (sf0.1)
-        # into the edge stage that bench's pre-built-frame timing never
-        # billed (r10 profiling receipt, PERF.md). Here each cluster
+        # into the edge stage (r10 profiling receipt, PERF.md). Here each cluster
         # enters Python ONCE, normalizes, takes G = Vn·Vnᵀ with BLAS,
         # and emits only the ≥ threshold (id_a < id_b) pairs — the
         # shuffle carries cluster rows, never pair rows, and the cap

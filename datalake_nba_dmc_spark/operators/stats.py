@@ -1261,8 +1261,8 @@ def drift_panel_by(
     contracts (pytest law). Segment totals are re-derived from ``g``
     itself (summing per-value counts — same values as the counts
     stage's own totals) so not even the totals agg touches the corpus
-    a second time. The eager checkpoint makes this builder
-    REBUILD_EACH_PASS at bench registration (the hyperball rule)."""
+    a second time. The eager checkpoint makes the builder itself run a
+    job, so its cost lands in the builder call, not the returned plan."""
     probs = sorted(set(int(p) for p in probs_pct))
     if not probs or probs[0] < 1 or probs[-1] > 100:
         raise ValueError("probs_pct must be integers in [1, 100]")

@@ -30,8 +30,8 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 #: semanticHash → partition count. The probe below costs a full physical
 #: planning pass (~0.15-0.25 s driver time) the FIRST time a plan is
 #: converted to an RDD; pipelines that re-build the same subtree every
-#: pass (the bench's rebuild-each-pass queries, repeated suite runs over
-#: one sf_dir) pay it every call without this memo. Keyed by the ANALYZED
+#: pass (timed builder calls, repeated suite runs over one sf_dir) pay
+#: it every call without this memo. Keyed by the ANALYZED
 #: plan's semantic hash — same session + same files ⇒ same partitioning.
 #: Bounded: evicted wholesale past _NPART_MEMO_MAX (no LRU bookkeeping
 #: needed at these sizes).

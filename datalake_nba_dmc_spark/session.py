@@ -6,9 +6,9 @@ with a plain open-source ``SparkSession``. Configuration is chosen for the
 100 TB posture:
 
 - AQE on (runtime re-plan, skew-join handling, partition coalescing).
-- ``spark.sql.shuffle.partitions`` sized to the machine locally; on a real
-  cluster this (or AQE's coalescing) should target ~128 MB per shuffle
-  partition.
+- ``spark.sql.shuffle.partitions`` fixed at 32 locally (AQE coalesces
+  the small ones); on a real cluster this (or AQE's coalescing) should
+  target ~128 MB per shuffle partition.
 - Arrow enabled so Pandas-UDF extension operators get vectorized batches.
 - UTC session timezone so date/timestamp semantics match the DuckDB oracle.
 """
@@ -77,7 +77,7 @@ def get_spark(app_name: str = "datalake_nba_dmc_spark", master: str | None = Non
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

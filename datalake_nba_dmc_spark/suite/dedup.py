@@ -77,10 +77,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle HOF pipeline evaluated 2× (plan showed 4 parquet scans).
     # Eager localCheckpoint computes it once; interleaved A/B at sf0.1:
     # 1.116 s vs 1.291 s, identical 256 pairs. (At cluster scale, swap for
-    # persist(DISK_ONLY) if executor loss must stay recoverable.) Bench
-    # honesty: this makes the builder eager, so the query joins bench.py's
-    # REBUILD_EACH_PASS set — the checkpoint is billed inside the timed
-    # region every pass.
+    # persist(DISK_ONLY) if executor loss must stay recoverable.) The
+    # builder is eager: the checkpoint job runs inside the builder call.
     sh = sized_gram_rows(docs, "text", "doc_id", 3).localCheckpoint(eager=True)
     inter = (
         sh.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"), "gram")
@@ -1506,8 +1504,8 @@ def sample_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, banded star edges, component loop) + a map-side mixer
     projection — the split itself adds ZERO shuffles; in a shared
     session it rides the clusters query's persisted signature frame
-    (bench annotates the row cache_ridden; PERF.md carries the honest
-    15.7 s rebuild / 3.10 s steady independent costs)."""
+    (PERF.md carries the 15.7 s rebuild / 3.10 s steady independent
+    costs)."""
     from datalake_nba_dmc_spark.operators.portable_sketch import (
         leakage_safe_split,
     )
@@ -1623,8 +1621,8 @@ def sample_eval_decontaminated_split(
     (corpus never shuffled for the screen) + a chunk-grain exact
     semi-join over flagged docs only; the split itself is a map-side
     mixer with ZERO added shuffles. In a shared session the clusters
-    substrate rides its persisted signature frame (bench annotates
-    cache_ridden; PERF.md carries the independent rebuild cost)."""
+    substrate rides its persisted signature frame (PERF.md carries the
+    independent rebuild cost)."""
     from datalake_nba_dmc_spark.operators.dedup import (
         contamination_hits,
         contamination_hits_bloom,

@@ -590,8 +590,8 @@ def graph_hyperball_m64_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked contract, not an asserted one. alpha_for_m supplies the
     m-dependent bias constant; the per-round shape is unchanged (one
     edges⋈counters join + m flat MAX aggregates, state O(nodes·m)),
-    so the cost is ~2x the m=32 query — billed honestly via
-    REBUILD_EACH_PASS (eager-checkpoint iterative builder). The m-sweep
+    so the cost is ~2x the m=32 query, paid inside the builder call
+    (eager-checkpoint iterative builder). The m-sweep
     sanity law (m=64 aggregate stays inside the m=32 certificate band)
     is pinned in tests/test_hyperball.py."""
     from datalake_nba_dmc_spark.operators.hyperball import (
@@ -616,7 +616,7 @@ def graph_coreness_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree). Bit-equal to the windowed path per round (pytest law at
     two scales), hence the SAME oracle string — the recurrence, not
     the physical strategy, is the contract. Eager-checkpoint iterative
-    loop → REBUILD_EACH_PASS in bench (the hyperball precedent)."""
+    loop, so its rounds run inside the builder call."""
     from datalake_nba_dmc_spark.operators.graph import (
         coreness_micro_bucketed,
     )

@@ -673,8 +673,7 @@ def sim_ivf_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # semi-join AND the query-id roster) and Spark has no cross-subtree
     # CSE — left lazy, the whole brute-force cosine scan ran twice in
     # the final job. The leg is a ≤30-row top-k: materialize it once
-    # (r16; the builder is REBUILD_EACH_PASS-billed, so the checkpoint
-    # job stays inside the timed region — no work escapes the bench)
+    # (r16; the checkpoint job runs inside the builder call)
     exact = sim_bruteforce_topk(spark, sf_dir).localCheckpoint(eager=True)
     approx = ivf_sq8_topk(emb, queries, k=10, n_centroids=16, n_probe=4)
     return _recall_check(approx, exact, floor=3)

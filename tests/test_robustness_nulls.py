@@ -126,20 +126,16 @@ def test_minhash_candidates_skip_contentless_docs(spark):
 
 
 def test_minhash_dedup_arrow_path_tolerates_null_docs(spark):
-    """The Arrow signature path crashed on a None shingle array (len(None))
-    once token-less docs started carrying NULL grams; the NULL-sh filter
-    must run BEFORE the signature stage on both paths."""
+    """Token-less docs carry NULL grams; the NULL-sh filter must run
+    BEFORE the signature stage, so only the real near-dup pair survives."""
     from datalake_nba_dmc_spark.operators.dedup import minhash_dedup
 
     df = spark.createDataFrame(_CONTENTLESS, ["doc_id", "text"])
-    for use_arrow in (False, True):
-        pairs = {
-            (r["id_a"], r["id_b"])
-            for r in minhash_dedup(
-                df, shingle_n=2, threshold=0.5, use_arrow=use_arrow
-            ).collect()
-        }
-        assert pairs == {(4, 5)}
+    pairs = {
+        (r["id_a"], r["id_b"])
+        for r in minhash_dedup(df, shingle_n=2, threshold=0.5).collect()
+    }
+    assert pairs == {(4, 5)}
 
 
 def test_simhash_near_dups_skip_contentless_docs(spark):

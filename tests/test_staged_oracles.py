@@ -1336,30 +1336,6 @@ def test_cms_heavy_hitters_duckdb_twin(spark):
 
 
 @needs_testdata
-def test_minhash_portable_arrow_matches_expression(spark):
-    """The two minhash_portable execution paths (token-decomposed numpy
-    Arrow batch vs the default interpreted SQL char-fold) are
-    value-identical over the whole gate corpus — the DuckDB twin above
-    runs against the default expression path, so this closes
-    arrow-path coverage."""
-    from datalake_nba_dmc_spark.operators.portable_sketch import (
-        minhash_portable,
-    )
-    from datalake_nba_dmc_spark.sources import TableRegistry
-
-    docs = TableRegistry(spark, SF).documents
-    arrow = sorted(
-        (r.doc_id, r.h_idx, r.sig_value)
-        for r in minhash_portable(docs, use_arrow=True).collect()
-    )
-    expr = sorted(
-        (r.doc_id, r.h_idx, r.sig_value)
-        for r in minhash_portable(docs, use_arrow=False).collect()
-    )
-    assert arrow == expr and len(arrow) > 0
-
-
-@needs_testdata
 def test_second_batch_staged_ops_layout_invariant(spark):
     """Pre-empts the partition-perturbation audit these operators will
     face once registered (r10's first run caught pyspark.ml KMeans
@@ -1396,7 +1372,7 @@ def test_second_batch_staged_ops_layout_invariant(spark):
         "triangles": lambda d: triangle_count(edges(d)),
         "cms_counters": lambda d: cms_counters(d),
         "cms_hh": lambda d: cms_heavy_hitters(d, k=10, width=8),
-        "minhash_arrow": lambda d: minhash_portable(d, use_arrow=True),
+        "minhash": lambda d: minhash_portable(d),
         "minhash_clusters": lambda d: minhash_portable_clusters(d),
         "coreness": lambda d: __import__(
             "datalake_nba_dmc_spark.operators.graph",

@@ -130,41 +130,16 @@ def test_driver_window_priority():
     )
 
 
-def test_bench_final_line_fits_tail_window():
-    """VERDICT r10 ask #8 / r15 ask #2: the driver parses JSON from the
-    LAST ~2000 bytes of bench stdout. The FINAL line now inlines the
-    full HEADLINE per-query dict (so the driver's PERF per_query tables
-    populate), and must stay under budget even in the WORST case —
-    maximal float widths, every headline query unstable, every watch
-    entry present. _final_line degrades the queries dict to the
-    `_detail` pointer rather than ever busting the window; this pins
-    both the normal-case fit AND the degradation guard."""
-    import json
+def test_window_plan_skips_rows_only():
+    """tools/window_plan.py recommends only oracle-checked queries: a
+    rows-only name can yield no driver check, and load_all() pins those
+    names below the window (test_driver_window_priority). The plan leads
+    with every oracle-checked query that has no driver row yet."""
+    from tools.window_plan import last_checked, window_plan
 
-    import bench
-
-    worst_timings = {n: 99999.999 for n in bench.HEADLINE}
-    worst_ext = {n: 99999.999 for n in bench._WATCH + bench.CACHE_RIDDEN}
-    line = bench._final_line(
-        99999.999,
-        0.1,
-        worst_timings,
-        99999.999,
-        99999.999,
-        worst_ext,
-        120.0,
-        list(bench.HEADLINE),  # worst case: ALL unstable
-    )
-    assert len(line) <= bench._FINAL_LINE_BUDGET - 100, (
-        f"FINAL line worst case is {len(line)} bytes — too close to the "
-        f"driver's ~{bench._FINAL_LINE_BUDGET}-byte tail window"
-    )
-    # the realistic case (nothing unstable) must carry per-query inline
-    typical = bench._final_line(
-        19.999, 0.1, worst_timings, 105.99, 22.99, worst_ext, 0.0, []
-    )
-    parsed = json.loads(typical)
-    assert set(parsed["queries"]) == set(bench.HEADLINE), (
-        "typical FINAL line must inline the full headline per-query dict"
-    )
-    assert len(typical) <= bench._FINAL_LINE_BUDGET - 100
+    specs = load_all()
+    last = last_checked(REPO)
+    plan = window_plan(specs, last)
+    assert all(specs[n].oracle is not None for n in plan)
+    never = [n for n, s in specs.items() if s.oracle is not None and n not in last]
+    assert plan[: len(never)] == never

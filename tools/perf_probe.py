@@ -1,18 +1,16 @@
-"""r15 optimization probe: isolated noop-sink timing + plan capture.
+"""Per-query probe: noop-sink timing + plan capture.
 
 Usage:
     python tools/perf_probe.py [--sf DIR] [--passes N] [--tag before|after] \
         [--plans-only] query [query ...]
 
-For each named suite query: builds the DataFrame (REBUILD-style — the
-builder re-runs inside the timed region every pass, so eager builders are
-billed honestly), times N noop-sink writes (guide §1.4), prints per-pass
-seconds + min, and writes `.explain("formatted")` to
+For each named suite query, every pass times what perfbench times:
+``spark.catalog.clearCache()``, then the builder call (so eager builders
+and the intermediates they persist are billed each pass), then the noop
+write of the returned frame. Prints per-pass seconds + min. With
+``--tag`` it also writes ``.explain("formatted")`` to
 <plans-dir>/<name>_<tag>.txt (guide §1 "capture the plan shape").
-Jobs are labelled per query (guide §1.5). ``--clear-cache`` calls
-spark.catalog.clearCache() before every pass so builders that persist()
-an intermediate are billed their honest FIRST-build cost each pass
-instead of the plan-cache hit (r16).
+Jobs are labelled per query (guide §1.5).
 """
 
 from __future__ import annotations
@@ -35,11 +33,6 @@ def main() -> None:
     ap.add_argument("--tag", default=None)
     ap.add_argument("--plans-dir", default="plans/r16")
     ap.add_argument("--plans-only", action="store_true")
-    ap.add_argument("--clear-cache", action="store_true",
-                    help="clearCache() before every pass (honest first-build cost "
-                         "for builders that persist intermediates)")
-    ap.add_argument("--prebuild", action="store_true",
-                    help="build once outside the timed region (non-REBUILD style)")
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
     if args.plans_only and not args.tag:
@@ -57,9 +50,9 @@ def main() -> None:
 
     for name in args.queries:
         spec = specs[name]
-        spark.sparkContext.setJobDescription(f"probe: {name} (build)")
-        df = spec.builder(spark, args.sf)
         if args.tag:
+            spark.sparkContext.setJobDescription(f"probe: {name} (plan)")
+            df = spec.builder(spark, args.sf)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
@@ -70,12 +63,10 @@ def main() -> None:
             continue
         times = []
         for p in range(args.passes):
-            if args.clear_cache:
-                spark.catalog.clearCache()
+            spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"probe: {name} pass {p}")
             start = time.perf_counter()
-            d = df if args.prebuild else spec.builder(spark, args.sf)
-            d.write.format("noop").mode("overwrite").save()
+            spec.builder(spark, args.sf).write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - start)
         spark.sparkContext.setJobDescription(None)
         print(
