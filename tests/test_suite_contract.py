@@ -64,46 +64,26 @@ def test_driver_window_priority():
        latest_round (meaning this very window produced that row);
     3. backlog entries that didn't fit sit contiguously just past the
        edge (they lead the next round's cut);
-    4. the NO_ORACLE_PINNED names (rows-only by design — a window slot
-       spent on them can only yield a `no_oracle` err row) sit at the
-       absolute BOTTOM of the rotation, outside the window forever
-       (VERDICT r11 ask #2); they are exempt from the staleness and
-       contiguity rules their pinning intentionally violates.
+    4. the rows-only queries (no oracle — a window slot spent on them can
+       only yield a `no_oracle` err row) sit after every oracle-checked
+       query, outside the window (VERDICT r11 ask #2); they are exempt
+       from the staleness and contiguity rules.
     """
-    import glob
-    import json
-    import os
-
-    from datalake_nba_dmc_spark.suite import NO_ORACLE_PINNED, TOUCHED_R16
+    from tools.window_plan import last_checked
 
     specs = load_all()
     names = list(specs)
     window = names[:50]
-    pinned = set(NO_ORACLE_PINNED)
-    # VERDICT r15 ask #1: optimization-round rewrites must be re-proved by
-    # the driver's own oracle even when a slot checked them recently —
-    # TOUCHED_R16 names are exempt from the staleness rule (and must all
-    # actually BE in the window).
-    touched = set(TOUCHED_R16)
-    assert touched <= set(window), (
-        f"touched queries outside the window: {sorted(touched - set(window))}"
+    rows_only = {n for n, s in specs.items() if s.oracle is None}
+    n_checked = len(names) - len(rows_only)
+    assert set(names[n_checked:]) == rows_only, (
+        "rows-only queries must sit after every oracle-checked one"
     )
 
-    # the pin itself: all 11 at the very bottom, none with an oracle
-    assert names[-len(NO_ORACLE_PINNED) :] == NO_ORACLE_PINNED
-    assert all(specs[n].oracle is None for n in NO_ORACLE_PINNED)
-    # and the pinned list is EXACTLY the registry's no-oracle set — a new
-    # rows-only registration must either get an oracle or join the pin
-    assert pinned == {n for n, s in specs.items() if s.oracle is None}
-
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
-        for q in json.load(open(path)):
-            last[q] = max(last.get(q, 0), rnd)
+    last = last_checked(REPO)
     latest_round = max(last.values())
 
-    never_checked = [n for n in names if n not in last and n not in pinned]
+    never_checked = [n for n in names if n not in last and n not in rows_only]
     overflow = [n for n in never_checked if n not in window]
     assert overflow == [], (
         f"never-checked queries outside the window: {overflow} — new "
@@ -111,7 +91,7 @@ def test_driver_window_priority():
     )
 
     for n in window:
-        if n not in last or last[n] == latest_round or n in touched:
+        if n not in last or last[n] == latest_round:
             continue
         assert last[n] <= latest_round - 2, (
             f"{n} was checked in r{last[n]} — window slots belong to the "
@@ -120,8 +100,8 @@ def test_driver_window_priority():
     # just past the edge: the OLDEST cohort present in the tail (the
     # deliberately-deferred backlog) queues contiguously, leading the
     # next round's cut — nothing fresher interleaves ahead of it (the
-    # pinned names are exempt: they sit at the bottom by design)
-    tail = [n for n in names[50:] if n not in pinned]
+    # rows-only names are exempt: they sit at the bottom by design)
+    tail = [n for n in names[50:] if n not in rows_only]
     tail_last = [last[n] for n in tail if n in last]
     min_last = min(tail_last)
     tail_oldest = [n for n in tail if last.get(n) == min_last]

@@ -1,126 +1,110 @@
-"""Robustness audit — differential correctness on ADVERSARIAL inputs.
+"""Robustness audit — the registry re-checked on adversarial inputs and
+under perturbed execution.
 
-The driver's correctness gate (and ``tools/verify_local.py``) proves
-Spark==DuckDB parity on the *clean* generated testdata. This tool re-runs
-the same differential comparison on two mutated copies of the data that a
-100 TB crawl pipeline actually encounters:
+``tools/verify_local.py`` proves Spark == DuckDB on the clean testdata.
+Every mode here except ``bytes`` runs the registry (or the named queries)
+through one of two runners, prints one ``PASS``/``FAIL``/``CRASH``/
+``KNOWN``/``ROWS`` line per query and a ``[mode] ...`` summary, and exits
+non-zero if anything fails or crashes.
 
-- ``empty``  — every table present with the right schema but ZERO rows
-  (an empty partition / empty day / brand-new landing zone). A query that
-  crashes here (driver-side ``collect()[0]``, quantile on nothing, KMeans
-  on nothing) is a robustness bug regardless of its clean-data parity.
-- ``nulls``  — deterministic injection of NULLs, empty strings, and
-  whitespace/unicode-edge strings into non-key string columns, and NULLs
-  into non-key numeric/date columns (~6% of rows touched per column).
-  Spark and DuckDB see the IDENTICAL mutated bytes, so any hash mismatch
-  is a real engine-semantics divergence (or a twin whose equivalence
-  silently assumed no-null input) — both are findings.
-- ``skew``   — deterministic HEAVY-KEY injection (r7): one customer owns
-  50% of orders, one part/supplier 50% of lineitems, one user 50% of
-  events, one source 80% of documents, one text repeated across 30% of
-  documents (a hot LSH bucket AND a giant dup group), one vector repeated
-  across 30% of embeddings (a hot ANN/SemDeDup cluster). Unlike the other
-  modes this deliberately mutates JOIN KEYS — skewed foreign keys are the
-  production failure, not a degenerate input. Two gates: (a) the same
-  differential compare (results must stay correct under skew), and (b)
-  ``skew_invariants`` — the bounded-fan-out claims the operators promise
-  (star edges linear in bucket size, rank-limit pushdown present for the
-  domain quota, salted pre-agg present) are re-checked against the hot
-  data's ACTUAL row counts, not just the plan text.
+Fixture modes run ``verify_local.differential`` — the loop
+``verify_local`` itself runs — over a mutated copy of the sf0.001
+testdata (``SRC``), built once under ``/tmp/robustness_<mode>`` and
+rebuilt when ``_FIXTURE_SCHEME`` changes. Both engines read the same
+mutated bytes, so a hash mismatch is a real divergence; ``KNOWN_<MODE>``
+holds each triaged deviation with its reason.
 
-- ``dup``    — 100% duplicated data (r9): every table is concatenated
-  with itself, so EVERY row (including every primary key) appears exactly
-  twice — the re-crawled batch / double-delivered landing zone a 100 TB
-  ingest actually sees. Two gates: (a) the same differential compare
-  (duplicated rows create exact ties in every window ordering and break
-  every implicit key-uniqueness assumption; both engines see identical
-  bytes, so any divergence is a real duplicate-sensitivity bug), and (b)
-  ``dup_invariants`` — the scale-law claims: dedup-family outputs must
-  NOT scale with the duplication (the representative set / merged span
-  set is a function of the DISTINCT content), while linear aggregates
-  must scale EXACTLY 2× and ratio statistics must be bit-identical.
+- ``empty`` — every table present with its schema and ZERO rows. A query
+  that crashes here (driver-side ``collect()[0]``, a quantile of nothing)
+  is a bug whatever its clean-data parity.
+- ``nulls`` — NULLs, empty strings and whitespace/unicode-edge strings in
+  non-key string columns, NULLs in non-key numeric/date columns (~6% of
+  rows per column).
+- ``skew`` — heavy keys: one customer owns 50% of orders, one part and
+  supplier 50% of lineitems, one user 50% of events, one source 80% and
+  one text 30% of documents, one vector 30% of embeddings. Unlike the
+  other fixtures this mutates JOIN KEYS. ``skew_invariants`` then checks
+  the bounded-fan-out promises against the hot data's row counts: star
+  edges in the MinHash/SimHash banding, the domain quota's rank-limit
+  pushdown, SemDeDup's capped clustering, and the prefix filter on a
+  Zipf-hot corpus.
+- ``dup`` — every table concatenated with itself, so every row and key
+  appears twice. ``dup_invariants`` then checks the scale laws against
+  the clean run: dedup outputs follow the distinct content, additive
+  measures double exactly, ratio statistics stay bit-identical.
 
-- ``partitions`` — determinism under partition perturbation (r10): the
-  CLEAN data re-planned under three radically different physical layouts
-  (1 / 7 / 200 shuffle partitions, each with a different input-split
-  size); every query must produce a BIT-IDENTICAL result set across all
-  three. Catches order-dependent aggregation state, non-deterministic
-  tie-breaking, and partition-count-dependent logic that both the fixed-
-  layout clean runs and the DuckDB differential (which only sees final
-  values) are blind to. No mutated fixture and no second engine — the
-  three layouts ARE the differential.
+Same-data modes run ``same_data`` over the clean sf0.001 tables: each
+query runs once per ``Trial`` and every trial must return the same
+``(rows, canonical_hash)``. A trial sets SQL confs (restored to their
+prior values afterwards) or collects the result its own way; trials with
+equal confs share one build of the query.
 
-- ``spill``  — memory-pressure/spill determinism (r11): every query runs
-  twice in one session — default confs, then with the window / sort-merge
-  -join / cartesian / session-window buffers forced OUT of their in-memory
-  arrays after 2 rows (spilling every 53) and ObjectHashAggregate forced
-  into its sort-based fallback after 2 keys — and the two result sets must
-  be BIT-IDENTICAL. Catches accumulation-order and partial-state bugs that
-  only manifest when operators externalize; the clean runs and the
-  partitions audit both execute comfortably in memory and cannot reach
-  these code paths. The session event log is parsed afterwards and the
-  audit FAILS ITSELF if zero bytes actually spilled (a vacuous pass —
-  e.g. a future Spark renames the threshold confs).
+- ``partitions`` — 1, 7 and 200 shuffle partitions, each with a different
+  input-split size: order-dependent aggregation, tie-breaking and
+  partition-count-dependent logic.
+- ``codegen`` — whole-stage codegen and generated expressions against the
+  interpreted evaluator (``NO_CODEGEN``), which Spark can fall back to
+  silently in production.
+- ``spill`` — window, sort-merge-join, cartesian and session-window
+  buffers forced to spill after 2 rows and object-hash aggregation forced
+  into its sort fallback. The receipt is the bytes the spill trials'
+  jobs spilled, read from the status store; zero over the full registry
+  prints ``CONF-INEFFECTIVE`` and fails the audit as vacuous.
+- ``retry`` — every result-stage task fails its first attempt under a
+  ``local[N,3]`` master, so the scheduler re-runs it: non-idempotent
+  accumulators and seed-per-attempt bugs. A canary job first proves the
+  injection engages, or the audit prints ``CONF-INEFFECTIVE`` and fails.
 
-- ``codegen`` — codegen-vs-interpreted determinism (standing battery
-  member since r12; first full run recorded r11): every query runs under
-  the default whole-stage-codegen evaluator and again with
-  ``spark.sql.codegen.factoryMode=NO_CODEGEN`` (+ wholeStage off), and
-  the two result sets must be bit-identical. The generated and
-  interpreted expression evaluators are independent implementations — a
-  classic Spark divergence surface — and the r10 janino finding proved
-  the interpreted path can switch on SILENTLY in production, so this
-  invariant is one the suite actually relies on.
-
-- ``retry`` — task-retry determinism (r12, VERDICT r11 ask #5): every
-  query runs clean and again with every result-stage task failing its
-  FIRST attempt (injected ``TaskContext.attemptNumber()==0`` raise under
-  a ``local[N,3]`` master), and the two result sets must be
-  bit-identical. Retried tasks re-execute their whole pipelined stage,
-  catching non-idempotent accumulators and seed-per-attempt bugs that
-  every run-once mode is structurally blind to; a canary job proves the
-  injection engages (vacuous-pass guard).
-
-- ``bytes``  — malformed-media robustness (r8): truncated IDAT, corrupt
-  CRCs, lying IHDR/SOF/BMP dimension and offset fields, invalid filter
-  and Huffman structures, RIFF size-field overflows, random/empty/NULL
-  payloads — driven through the DISTRIBUTED decode surface
-  (``image_pixel_stats`` + header extractors), pinning
-  quarantine-not-crash semantics per crafted case (no differential twin:
-  no second engine decodes images here; the gate is the per-case
-  expected-outcome table + the row-preservation invariant).
+``bytes`` drives crafted malformed media (truncations, lying size and
+dimension fields, corrupt CRCs, invalid filter and Huffman structures,
+RIFF size overflows, Y4M stream damage) through the distributed decoders.
+Every row must come out (quarantine, not crash), every malformed case
+must land in ``decode_error`` and every good case decode with its true
+dimensions; ``KNOWN_BYTES`` holds the justified exceptions.
 
 Usage::
 
-    python tools/robustness_audit.py empty [query ...]
-    python tools/robustness_audit.py nulls [query ...]
-    python tools/robustness_audit.py skew  [query ...]
-    python tools/robustness_audit.py dup   [query ...]
+    python tools/robustness_audit.py MODE [query ...]
     python tools/robustness_audit.py bytes
-    python tools/robustness_audit.py partitions [query ...]
-    python tools/robustness_audit.py spill [query ...]
-    python tools/robustness_audit.py codegen [query ...]
-    python tools/robustness_audit.py retry [query ...]
 
-Builds the mutated dataset under ``/tmp/robustness_<mode>`` (cached — wiped
-and rebuilt when missing) from ``/root/testdata/sf0.001``, then runs the
-full registry through the same compare loop as ``verify_local``. Exit 0 if
-every oracle query matches and nothing crashes.
+MODE is one of empty, nulls, skew, dup, partitions, codegen, spill,
+retry. Naming queries runs only those; the ``skew``/``dup`` invariants
+and the spill receipt guard run only over the full registry. A caller
+with its own session (a test, a scheduled slice) calls ``differential``
+or ``same_data`` directly.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import sys
-import traceback
+import uuid
 import zlib
+from collections import Counter
+from collections.abc import Callable
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark import TaskContext
+from pyspark.sql import DataFrame
+
+from datalake_nba_dmc_spark.session import get_spark
+from datalake_nba_dmc_spark.suite import load_all
+from tools.verify_local import (
+    RAISES,
+    canonical_hash,
+    crash_line,
+    differential,
+    record,
+    selected,
+)
 
 SRC = "/root/testdata/sf0.001"
 
@@ -136,28 +120,29 @@ def _is_key(name: str) -> bool:
 
 # Expected outcomes on EMPTY input, each triaged (see PERF.md round-6
 # robustness-audit notes):
-# - "raises": index builds fail fast with a clear ValueError by design —
+# - RAISES: index builds fail fast with a clear ValueError by design —
 #   you cannot train centroids/codebooks/PCA on nothing, and silently
 #   returning an empty index would mask an upstream failure.
-# - "diverges": Spark's GROUP BY CUBE/ROLLUP/GROUPING SETS on empty input
-#   yields 0 rows, while the SQL standard (and DuckDB) yields the
+# - grouping sets: Spark's GROUP BY CUBE/ROLLUP/GROUPING SETS on empty
+#   input yields 0 rows, while the SQL standard (and DuckDB) yields the
 #   grand-total row for the empty grouping set. Engine semantics, not an
 #   operator bug; our engine is Spark, so Spark's answer stands.
+_EMPTY_GROUPING_SETS = "engine divergence on empty grouping sets"
 KNOWN_EMPTY: dict[str, str] = {
-    "emb_pca_project": "raises",
-    "emb_pca_whitened": "raises",
-    "emb_cluster_assign_ok": "raises",
-    "emb_pq_codes": "raises",
-    "sim_ivf_recall": "raises",
-    "sim_ivf_sq8_recall": "raises",  # same ivf_index/KMeans empty contract
-    "sim_ivf_topk": "raises",
-    "sim_pq_adc_recall": "raises",
-    "sim_semantic_dedup": "raises",
-    "sim_semantic_dedup_certificate": "raises",
-    "agg_cube": "diverges",
-    "agg_grouping_sets": "diverges",
-    "agg_rollup": "diverges",
-    "events_time_rollup": "diverges",
+    "emb_pca_project": RAISES,
+    "emb_pca_whitened": RAISES,
+    "emb_cluster_assign_ok": RAISES,
+    "emb_pq_codes": RAISES,
+    "sim_ivf_recall": RAISES,
+    "sim_ivf_sq8_recall": RAISES,  # same ivf_index/KMeans empty contract
+    "sim_ivf_topk": RAISES,
+    "sim_pq_adc_recall": RAISES,
+    "sim_semantic_dedup": RAISES,
+    "sim_semantic_dedup_certificate": RAISES,
+    "agg_cube": _EMPTY_GROUPING_SETS,
+    "agg_grouping_sets": _EMPTY_GROUPING_SETS,
+    "agg_rollup": _EMPTY_GROUPING_SETS,
+    "events_time_rollup": _EMPTY_GROUPING_SETS,
 }
 
 # Expected outcomes on NULL/edge-mutated input, each triaged and verified
@@ -250,9 +235,7 @@ KNOWN_DUP: dict[str, str] = {
 
 
 def dup_invariants(spark, sf_dir: str, specs) -> list[str]:
-    """Scale-law checks on 100%-duplicated data (r9 audit dimension):
-    differential parity says Spark==DuckDB; these pin the claims that make
-    a dedup engine USEFUL on re-delivered data, against the CLEAN run:
+    """The ``dup`` scale laws, each against the clean run:
 
     - ``dedup_exact``: the representative (min-id-per-fingerprint) SET is
       a function of the distinct content — bit-identical under
@@ -267,8 +250,6 @@ def dup_invariants(spark, sf_dir: str, specs) -> list[str]:
       every ratio statistic (avg_qty, avg_disc) is bit-identical
       ((2s)/(2c) rounds to the same IEEE double as s/c).
     """
-    from tools.verify_local import canonical_hash
-
     problems: list[str] = []
 
     def run(name: str, d: str):
@@ -324,9 +305,7 @@ def dup_invariants(spark, sf_dir: str, specs) -> list[str]:
 
 
 def skew_invariants(spark, sf_dir: str, specs) -> list[str]:
-    """Re-check the bounded-fan-out PROMISES against the hot data's actual
-    row counts (VERDICT r6 ask #6) — plan-text assertions prove the shape,
-    these prove the shape holds its bound when one key dominates:
+    """The ``skew`` fan-out bounds, against the hot data's row counts:
 
     - MinHash/SimHash banding emit STAR edges: candidate/edge counts must
       stay ≤ rows × bands even though 30% of docs share one text (an
@@ -710,28 +689,11 @@ def _bytes_cases() -> list[tuple[str, str, bytes | None]]:
 
 
 def bytes_audit() -> int:
-    """Malformed-bytes robustness (r8 audit dimension): drive the REAL
-    decoders through the distributed operator surface
-    (``image_pixel_stats`` — format-sniffing decode — and the
-    header extractors) with a crafted corpus of truncations, lying
-    size/dimension fields, corrupt CRCs, invalid filter/Huffman
-    structures, and size-field overflows. Invariants:
-
-    1. quarantine-not-crash: the Spark stage completes; EVERY input row
-       produces exactly one output row;
-    2. every 'error' case lands in ``decode_error`` (no silent wrong
-       pixels), every 'ok' case decodes with its true dimensions;
-    3. WAV size-field attacks never crash the header walk, and lying
-       sizes are clamped, not believed;
-    4. deviations are justified per-entry in KNOWN_BYTES.
-    """
     from datalake_nba_dmc_spark.operators.multimodal import (
         extract_audio_headers,
         extract_image_headers,
         image_pixel_stats,
     )
-    from datalake_nba_dmc_spark.session import get_spark
-
     spark = get_spark("robustness_bytes")
     cases = _bytes_cases()
     rows = [
@@ -877,447 +839,162 @@ def _y4m_cases():
     ]
 
 
-#: Partition-perturbation trials (r10 audit dimension): the SAME clean
-#: sf0.001 data re-planned under radically different physical layouts —
-#: one shuffle partition (everything serializes through a single reducer:
-#: any order-dependent aggregation state sees rows in one global order),
-#: seven (a prime, so hash co-partitioning never lines up with the default
-#: 32), and two hundred (most partitions empty at this scale: empty-
-#: partition merge paths execute), each with a different input-split size
-#: so file scans also fragment differently. Every registered query must
-#: produce a BIT-IDENTICAL result set across all three — catching
-#: order-dependent aggregation, non-deterministic tie-breaking, and
-#: partition-count-dependent logic that the fixed-layout clean runs (and
-#: the DuckDB differential, which only sees the final values) can't.
-_PARTITION_TRIALS: list[tuple[str, dict[str, str]]] = [
-    ("shuf1/128MB-splits", {
-        "spark.sql.shuffle.partitions": "1",
-        "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-    }),
-    ("shuf7/64KB-splits", {
-        "spark.sql.shuffle.partitions": "7",
-        "spark.sql.files.maxPartitionBytes": str(64 * 1024),
-    }),
-    ("shuf200/1MB-splits", {
-        "spark.sql.shuffle.partitions": "200",
-        "spark.sql.files.maxPartitionBytes": str(1024 * 1024),
-    }),
-]
+class Trial(NamedTuple):
+    """One way to run a query: SQL confs set for the run (restored to
+    their prior values afterwards) and how the built DataFrame is
+    collected."""
 
-#: Queries whose OUTPUT legitimately describes the physical layout itself
-#: — triaged, not bugs (everything else must be bit-identical):
-KNOWN_PARTITIONS: dict[str, str] = {
-    # populated by triage on first run; keep empty unless a query's
-    # CONTRACT is layout-dependent (e.g. a file manifest listing the
-    # files a write produced — file count follows the partition count)
-}
+    label: str
+    confs: dict[str, str] = {}
+    collect: Callable[[DataFrame], pd.DataFrame] = lambda df: df.toPandas()
 
 
-def partitions_audit(only: set[str]) -> int:
-    """Determinism under partition perturbation: run every query once per
-    _PARTITION_TRIALS layout on the CLEAN sf0.001 tables and require the
-    canonical value hash to be identical across layouts."""
-    from datalake_nba_dmc_spark.session import get_spark
-    from datalake_nba_dmc_spark.suite import load_all
-    from tools.verify_local import canonical_hash
+def _spilled_bytes(spark, group: str) -> int:
+    """Disk + memory bytes spilled by the stages of the jobs in ``group``,
+    read from the status store."""
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    stages = {
+        s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
+    }
+    total = 0
+    for sid in stages:
+        if tracker.getStageInfo(sid) is not None:
+            sd = store.lastStageAttempt(sid)
+            total += sd.diskBytesSpilled() + sd.memoryBytesSpilled()
+    return total
 
-    specs = load_all()
-    spark = get_spark("robustness_partitions")
-    n_pass = n_fail = n_crash = n_known = 0
-    failures: list[str] = []
-    for name, spec in sorted(specs.items()):
-        if only and name not in only:
-            continue
-        if name in KNOWN_PARTITIONS:
-            print(f"KNOWN {name}: {KNOWN_PARTITIONS[name]}")
-            n_known += 1
-            continue
-        results: list[tuple[str, int, str]] = []
-        crashed = False
-        for label, confs in _PARTITION_TRIALS:
-            for k, v in confs.items():
+
+def _run_trial(spark, trial: Trial, build) -> tuple[pd.DataFrame, int]:
+    """``trial.collect(build(confs))`` under the trial's confs, in a job
+    group of its own; returns the result and the bytes its jobs spilled."""
+    sc = spark.sparkContext
+    prior = {k: spark.conf.get(k, None) for k in trial.confs}
+    group = f"robustness-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, trial.label)
+    try:
+        for k, v in trial.confs.items():
+            spark.conf.set(k, v)
+        pdf = trial.collect(build(frozenset(trial.confs.items())))
+        return pdf, _spilled_bytes(spark, group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
                 spark.conf.set(k, v)
-            try:
-                pdf = spec.builder(spark, SRC).toPandas()
-                results.append((label, len(pdf), canonical_hash(pdf)))
-            except Exception as e:  # noqa: BLE001
-                print(
-                    f"CRASH {name} [{label}]: {type(e).__name__}: "
-                    f"{str(e).splitlines()[0][:160]}"
-                )
-                n_crash += 1
-                failures.append(name)
-                crashed = True
-                break
-        if crashed:
-            continue
-        hashes = {h for _, _, h in results}
-        if len(hashes) == 1:
-            print(f"PASS {name} ({results[0][1]} rows, {len(results)} layouts)")
-            n_pass += 1
-        else:
-            detail = "; ".join(f"{lbl}: {n} rows {h}" for lbl, n, h in results)
-            print(f"FAIL {name}: layout-dependent result — {detail}")
-            n_fail += 1
-            failures.append(name)
-    print(
-        f"\n[partitions] {n_pass} pass, {n_fail} layout-dependent, "
-        f"{n_crash} crash, {n_known} known"
-    )
-    if failures:
-        print("failures:", " ".join(sorted(failures)))
-    return 1 if (n_fail or n_crash) else 0
 
 
-#: Spill-forcing SQL confs (all DYNAMIC — toggled per trial in one
-#: session). The buffer thresholds drive ExternalAppendOnlyUnsafeRowArray
-#: (window frames, sort-merge-join buffered matches, cartesian blocks,
-#: session windows) out of its in-memory array and into a spilling
-#: UnsafeExternalSorter after a handful of rows; the ObjectHashAggregate
-#: threshold forces the sort-based fallback for object aggregates
-#: (collect_list/set, percentile_approx) after 7 distinct keys. Values
-#: are primes so a "coincidentally aligned batch" can't mask an
-#: order-sensitivity bug. Thresholds are tiny (2/3) because the audit
-#: runs at sf0.001, where per-group buffers are a handful of rows — the
-#: receipt below proves spills actually happened.
-_SPILL_CONFS = {
-    "spark.sql.windowExec.buffer.in.memory.threshold": "2",
-    "spark.sql.windowExec.buffer.spill.threshold": "53",
-    "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold": "2",
-    "spark.sql.sortMergeJoinExec.buffer.spill.threshold": "53",
-    "spark.sql.cartesianProductExec.buffer.in.memory.threshold": "2",
-    "spark.sql.cartesianProductExec.buffer.spill.threshold": "53",
-    "spark.sql.sessionWindow.buffer.in.memory.threshold": "2",
-    "spark.sql.sessionWindow.buffer.spill.threshold": "53",
-    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "2",
-}
-
-#: Queries whose spill-mode divergence is triaged as contractual:
-KNOWN_SPILL: dict[str, str] = {}
-
-#: Interpreted-evaluation trial confs (all DYNAMIC): disable whole-stage
-#: codegen AND force the expression-evaluator factory to the interpreted
-#: path, so every projection/filter/aggregate runs through
-#: InterpretedUnsafeProjection instead of generated Java — the two
-#: implementations are a classic Spark divergence surface (and the r10
-#: janino finding showed interpreted fallback happens SILENTLY in
-#: production, so "interpreted equals codegen" is an invariant the suite
-#: actually relies on).
-_NO_CODEGEN_CONFS = {
-    "spark.sql.codegen.wholeStage": "false",
-    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
-}
-
-#: Queries whose codegen-mode divergence is triaged as contractual:
-KNOWN_CODEGEN: dict[str, str] = {}
-
-#: Queries whose retry-mode divergence is triaged as contractual:
-KNOWN_RETRY: dict[str, str] = {}
-
-
-def retry_audit(only: set[str]) -> int:
-    """Task-retry determinism (r12, VERDICT r11 ask #5): every query runs
-    clean, then again with EVERY result-stage task failing its first
-    attempt (an injected ``TaskContext.attemptNumber() == 0`` raise under
-    a ``local[N,3]`` master, so the scheduler retries instead of failing
-    the job) — and the two result sets must be BIT-IDENTICAL. A retried
-    task re-executes its whole pipelined stage (for map-only plans that
-    is the entire query; for shuffled plans the final stage re-reads the
-    deterministic shuffle output), catching non-idempotent accumulator
-    use, seed-per-attempt randomness, and attempt-dependent state that no
-    other mode can see — every other audit runs each task exactly once.
-
-    Efficacy receipt: a canary job first proves the injection engages —
-    the injected canary job only SURVIVES if the scheduler actually
-    retried every failed first attempt, and an uninjected probe then
-    confirms attemptNumber is live (reads 0 everywhere without
-    injection). The argument is probe + survival, not a per-task
-    attempt census; if either leg fails the audit FAILS itself as
-    vacuous."""
-    from pyspark.sql import SparkSession
-
-    from datalake_nba_dmc_spark.session import apply_runtime_confs
-    from datalake_nba_dmc_spark.suite import load_all
-    from tools.verify_local import canonical_hash
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    # local[N, 3]: the third slot is maxFailures — plain local[N] fails
-    # the whole job on the FIRST task failure, so retries need their own
-    # session (the spill-audit custom-session precedent)
-    spark = apply_runtime_confs(
-        SparkSession.builder.appName("robustness_retry")
-        .master(f"local[{cpus},3]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g")
-        )
-        .getOrCreate()
-    )
-    # OFF, not ERROR: every injected failure logs a full executor stack
-    # trace by design — thousands of them would bury the audit output.
-    # Real failures still surface as Python exceptions (CRASH rows).
-    spark.sparkContext.setLogLevel("OFF")
-
-    def fail_once(rows):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        if ctx is not None and ctx.attemptNumber() == 0:
-            raise RuntimeError("robustness_retry: injected task failure")
-        yield from rows
-
-    # canary: injection must actually engage (vacuous-pass guard)
-    attempts = (
-        spark.sparkContext.parallelize(range(8), 4)
-        .mapPartitions(fail_once)
-        .map(lambda _: 1)
-        .collect()
-    )
-    probe = (
-        spark.sparkContext.parallelize(range(4), 4)
-        .mapPartitions(
-            lambda it: [
-                __import__("pyspark").TaskContext.get().attemptNumber()
-            ]
-        )
-        .collect()
-    )
-    # the probe has no injection — attempt 0 everywhere proves
-    # attemptNumber is live; the canary surviving proves retries work
-    if len(attempts) != 8 or any(a != 0 for a in probe):
-        print("CONF-INEFFECTIVE: retry injection canary failed")
-        return 1
-
+def same_data(
+    spark, names, trials: list[Trial], sf_dir: str = SRC
+) -> tuple[dict[str, str], dict[str, int]]:
+    """Run each named query once per trial over ``sf_dir``, print one line
+    per query, and return its verdict — PASS (every trial returned the
+    same rows and canonical hash), FAIL or CRASH — plus the bytes spilled
+    per trial label."""
     specs = load_all()
-    n_pass = n_fail = n_crash = n_known = 0
-    failures: list[str] = []
-    for name, spec in sorted(specs.items()):
-        if only and name not in only:
-            continue
-        if name in KNOWN_RETRY:
-            print(f"KNOWN {name}: {KNOWN_RETRY[name]}")
-            n_known += 1
-            continue
+    verdicts: dict[str, str] = {}
+    spilled = dict.fromkeys((t.label for t in trials), 0)
+    for name in names:
+        # trials with equal confs share one build, so they differ only in
+        # how they collect (retry: one DataFrame, collected clean and retried)
+        @functools.cache
+        def build(confs: frozenset) -> DataFrame:
+            return specs[name].builder(spark, sf_dir)
+
+        results = []
         try:
-            df = spec.builder(spark, SRC)
-            clean = df.toPandas()
-            retried_rows = df.rdd.mapPartitions(
-                fail_once, preservesPartitioning=True
-            )
-            retried = spark.createDataFrame(retried_rows, df.schema).toPandas()
+            for t in trials:
+                pdf, nbytes = _run_trial(spark, t, build)
+                results.append((t.label, len(pdf), canonical_hash(pdf)))
+                spilled[t.label] += nbytes
         except Exception as e:  # noqa: BLE001
-            print(
-                f"CRASH {name}: {type(e).__name__}: "
-                f"{str(e).splitlines()[0][:160]}"
-            )
-            n_crash += 1
-            failures.append(name)
+            record(verdicts, name, "CRASH", f" [{t.label}]: {crash_line(e)}")
             continue
-        if len(clean) == len(retried) and canonical_hash(
-            clean
-        ) == canonical_hash(retried):
-            print(f"PASS {name} ({len(clean)} rows, clean==retried)")
-            n_pass += 1
-        else:
-            print(
-                f"FAIL {name}: retry-dependent result — "
-                f"clean {len(clean)} rows {canonical_hash(clean)}; "
-                f"retried {len(retried)} rows {canonical_hash(retried)}"
-            )
-            n_fail += 1
-            failures.append(name)
-    print(
-        f"\n[retry] {n_pass} pass, {n_fail} retry-dependent, "
-        f"{n_crash} crash, {n_known} known"
-    )
-    if failures:
-        print("failures:", " ".join(sorted(failures)))
-    return 1 if (n_fail or n_crash) else 0
-
-
-def codegen_audit(only: set[str]) -> int:
-    """Codegen-vs-interpreted determinism (staged r11 for the r12
-    battery): run every query twice in one session — default (codegen)
-    and with :data:`_NO_CODEGEN_CONFS` forcing interpreted expression
-    evaluation — and require BIT-IDENTICAL results. Catches generated-
-    vs-interpreted evaluator divergence, which the r10 janino finding
-    proved can switch on SILENTLY in production."""
-    from datalake_nba_dmc_spark.session import get_spark
-    from datalake_nba_dmc_spark.suite import load_all
-    from tools.verify_local import canonical_hash
-
-    specs = load_all()
-    spark = get_spark("robustness_codegen")
-    n_pass = n_fail = n_crash = n_known = 0
-    failures: list[str] = []
-    for name, spec in sorted(specs.items()):
-        if only and name not in only:
-            continue
-        if name in KNOWN_CODEGEN:
-            print(f"KNOWN {name}: {KNOWN_CODEGEN[name]}")
-            n_known += 1
-            continue
-        results = []
-        crashed = False
-        for label, confs in (
-            ("codegen", {}),
-            ("interpreted", _NO_CODEGEN_CONFS),
-        ):
-            for k in _NO_CODEGEN_CONFS:
-                spark.conf.unset(k)
-            for k, v in confs.items():
-                spark.conf.set(k, v)
-            try:
-                pdf = spec.builder(spark, SRC).toPandas()
-                results.append((label, len(pdf), canonical_hash(pdf)))
-            except Exception as e:  # noqa: BLE001
-                print(
-                    f"CRASH {name} [{label}]: {type(e).__name__}: "
-                    f"{str(e).splitlines()[0][:160]}"
-                )
-                n_crash += 1
-                failures.append(name)
-                crashed = True
-                break
-        for k in _NO_CODEGEN_CONFS:
-            spark.conf.unset(k)
-        if crashed:
-            continue
-        if len({h for _, _, h in results}) == 1:
-            print(f"PASS {name} ({results[0][1]} rows, codegen==interpreted)")
-            n_pass += 1
+        if len({(n, h) for _, n, h in results}) == 1:
+            labels = "==".join(lbl for lbl, _, _ in results)
+            record(verdicts, name, "PASS", f" ({results[0][1]} rows, {labels})")
         else:
             detail = "; ".join(f"{lbl}: {n} rows {h}" for lbl, n, h in results)
-            print(f"FAIL {name}: evaluator-dependent result — {detail}")
-            n_fail += 1
-            failures.append(name)
-    print(
-        f"\n[codegen] {n_pass} pass, {n_fail} evaluator-dependent, "
-        f"{n_crash} crash, {n_known} known"
+            record(verdicts, name, "FAIL", f": result differs across trials — {detail}")
+    return verdicts, spilled
+
+
+def _fail_first_attempt(rows):
+    ctx = TaskContext.get()
+    if ctx is not None and ctx.attemptNumber() == 0:
+        raise RuntimeError("robustness_retry: injected task failure")
+    yield from rows
+
+
+def _retried(df: DataFrame) -> pd.DataFrame:
+    rows = df.rdd.mapPartitions(_fail_first_attempt, preservesPartitioning=True)
+    return df.sparkSession.createDataFrame(rows, df.schema).toPandas()
+
+
+def _retry_canary(spark) -> bool:
+    """The injected canary job survives only if the scheduler retried every
+    failed first attempt; the uninjected probe reads attempt 0 everywhere,
+    proving ``attemptNumber`` is live."""
+    sc = spark.sparkContext
+    attempts = sc.parallelize(range(8), 4).mapPartitions(_fail_first_attempt).collect()
+    probe = (
+        sc.parallelize(range(4), 4)
+        .mapPartitions(lambda _: [TaskContext.get().attemptNumber()])
+        .collect()
     )
-    if failures:
-        print("failures:", " ".join(sorted(failures)))
-    return 1 if (n_fail or n_crash) else 0
+    return len(attempts) == 8 and all(a == 0 for a in probe)
 
 
-def spill_audit(only: set[str]) -> int:
-    """Memory-pressure/spill determinism (r11, VERDICT r10 ask #5): run
-    every query twice in one session — default confs, then the
-    _SPILL_CONFS trial that forces window/join/cartesian buffers and
-    object-hash aggregates to externalize after a few rows — and require
-    BIT-IDENTICAL results. Catches accumulation-order and partial-state
-    bugs that only manifest when operators spill, which neither the
-    clean differential nor the partitions audit can reach (both run
-    comfortably in memory).
-
-    Efficacy receipt: the session runs with event logging on; after the
-    audit the context is stopped and the log's task metrics are summed —
-    ZERO spilled bytes across the whole run means the confs silently
-    stopped engaging (a vacuous pass) and the audit FAILS itself."""
-    import json
-
-    from pyspark.sql import SparkSession
-
-    from datalake_nba_dmc_spark.session import apply_runtime_confs
-    from datalake_nba_dmc_spark.suite import load_all
-    from tools.verify_local import canonical_hash
-
-    eventdir = "/tmp/robustness_spill_eventlog"
-    shutil.rmtree(eventdir, ignore_errors=True)
-    os.makedirs(eventdir, exist_ok=True)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    spark = apply_runtime_confs(
-        SparkSession.builder.appName("robustness_spill")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", eventdir)
-        .config("spark.eventLog.compress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    specs = load_all()
-    n_pass = n_fail = n_crash = n_known = 0
-    failures: list[str] = []
-    for name, spec in sorted(specs.items()):
-        if only and name not in only:
-            continue
-        if name in KNOWN_SPILL:
-            print(f"KNOWN {name}: {KNOWN_SPILL[name]}")
-            n_known += 1
-            continue
-        results = []
-        crashed = False
-        for label, confs in (("default", {}), ("spill", _SPILL_CONFS)):
-            for k in _SPILL_CONFS:
-                spark.conf.unset(k)
-            for k, v in confs.items():
-                spark.conf.set(k, v)
-            try:
-                pdf = spec.builder(spark, SRC).toPandas()
-                results.append((label, len(pdf), canonical_hash(pdf)))
-            except Exception as e:  # noqa: BLE001
-                print(
-                    f"CRASH {name} [{label}]: {type(e).__name__}: "
-                    f"{str(e).splitlines()[0][:160]}"
-                )
-                n_crash += 1
-                failures.append(name)
-                crashed = True
-                break
-        if crashed:
-            continue
-        if len({h for _, _, h in results}) == 1:
-            print(f"PASS {name} ({results[0][1]} rows, default==spill)")
-            n_pass += 1
-        else:
-            detail = "; ".join(f"{lbl}: {n} rows {h}" for lbl, n, h in results)
-            print(f"FAIL {name}: spill-dependent result — {detail}")
-            n_fail += 1
-            failures.append(name)
-    # efficacy receipt: total spilled bytes from the event log
-    spark.sparkContext.stop()
-    spilled = 0
-    paths = [
-        os.path.join(root, f)
-        for root, _, files in os.walk(eventdir)
-        for f in files
-        if "appstatus" not in f
-    ]
-    for path in paths:
-        with open(path, encoding="utf-8", errors="replace") as fh:
-            for line in fh:
-                if '"Disk Bytes Spilled"' not in line:
-                    continue
-                try:
-                    ev = json.loads(line)
-                except ValueError:
-                    continue
-                tm = ev.get("Task Metrics") or {}
-                spilled += int(tm.get("Disk Bytes Spilled", 0)) + int(
-                    tm.get("Memory Bytes Spilled", 0)
-                )
-    print(
-        f"\n[spill] {n_pass} pass, {n_fail} spill-dependent, "
-        f"{n_crash} crash, {n_known} known; "
-        f"spilled_bytes_receipt={spilled}"
-    )
-    if spilled == 0 and not only:
-        print(
-            "CONF-INEFFECTIVE: zero bytes spilled across the whole audit — "
-            "the spill confs no longer engage; the pass is vacuous"
-        )
-        return 1
-    if failures:
-        print("failures:", " ".join(sorted(failures)))
-    return 1 if (n_fail or n_crash) else 0
+#: The same-data modes. Partition layouts: one shuffle partition (one
+#: reducer sees every row in one global order), seven (a prime, so hash
+#: co-partitioning never lines up with the default 32) and two hundred
+#: (most partitions empty at this scale), each with its own input-split
+#: size so file scans fragment differently. Spill: the buffer thresholds
+#: push ExternalAppendOnlyUnsafeRowArray (window frames, sort-merge-join
+#: matches, cartesian blocks, session windows) into a spilling sorter, and
+#: object-hash aggregation into its sort fallback, after 2 rows; the spill
+#: thresholds are primes so an aligned batch cannot mask an ordering bug.
+TRIALS: dict[str, list[Trial]] = {
+    "partitions": [
+        Trial("shuf1/128MB-splits", {
+            "spark.sql.shuffle.partitions": "1",
+            "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+        }),
+        Trial("shuf7/64KB-splits", {
+            "spark.sql.shuffle.partitions": "7",
+            "spark.sql.files.maxPartitionBytes": str(64 * 1024),
+        }),
+        Trial("shuf200/1MB-splits", {
+            "spark.sql.shuffle.partitions": "200",
+            "spark.sql.files.maxPartitionBytes": str(1024 * 1024),
+        }),
+    ],
+    "codegen": [
+        Trial("codegen"),
+        Trial("interpreted", {
+            "spark.sql.codegen.wholeStage": "false",
+            "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+        }),
+    ],
+    "spill": [
+        Trial("default"),
+        Trial("spill", {
+            "spark.sql.windowExec.buffer.in.memory.threshold": "2",
+            "spark.sql.windowExec.buffer.spill.threshold": "53",
+            "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold": "2",
+            "spark.sql.sortMergeJoinExec.buffer.spill.threshold": "53",
+            "spark.sql.cartesianProductExec.buffer.in.memory.threshold": "2",
+            "spark.sql.cartesianProductExec.buffer.spill.threshold": "53",
+            "spark.sql.sessionWindow.buffer.in.memory.threshold": "2",
+            "spark.sql.sessionWindow.buffer.spill.threshold": "53",
+            "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "2",
+        }),
+    ],
+    "retry": [Trial("clean"), Trial("retried", collect=_retried)],
+}
 
 
 #: Fixture-scheme tag written into the _COMPLETE marker. Bump whenever the
@@ -1433,102 +1110,63 @@ def _inject(t: pa.Table, seed_text: str) -> pa.Table:
     return pa.table(cols)
 
 
+KNOWN = {"empty": KNOWN_EMPTY, "nulls": KNOWN_NULLS, "skew": KNOWN_SKEW, "dup": KNOWN_DUP}
+INVARIANTS = {"skew": skew_invariants, "dup": dup_invariants}
+_COUNTED = {"PASS": "pass", "FAIL": "fail", "CRASH": "crash", "ROWS": "rows-only", "KNOWN": "known"}
+
+
+def report(mode: str, verdicts: dict[str, str], problems=(), extra: str = "") -> int:
+    """Print the summary and the failed names; the exit status."""
+    for p in problems:
+        print(f"FAIL invariant: {p}")
+    n = Counter(verdicts.values())
+    print(f"\n[{mode}] " + ", ".join(f"{n[v]} {w}" for v, w in _COUNTED.items()) + extra)
+    failures = sorted(q for q, v in verdicts.items() if v in ("FAIL", "CRASH"))
+    if failures:
+        print("failures:", " ".join(failures))
+    return 1 if failures or problems else 0
+
+
 def main() -> int:
     mode = sys.argv[1] if len(sys.argv) > 1 else "empty"
+    only = set(sys.argv[2:])
     if mode == "bytes":
         return bytes_audit()
-    if mode == "partitions":
-        return partitions_audit(set(sys.argv[2:]))
-    if mode == "spill":
-        return spill_audit(set(sys.argv[2:]))
-    if mode == "codegen":
-        return codegen_audit(set(sys.argv[2:]))
+    if mode not in KNOWN and mode not in TRIALS:
+        raise SystemExit(f"unknown mode {mode!r}")
+    names = selected(only)
+    if mode in KNOWN:
+        sf_dir = build_mutated(mode)
+        spark = get_spark(f"robustness_{mode}")
+        verdicts = differential(spark, sf_dir, names, KNOWN[mode])
+        if mode not in INVARIANTS:
+            return report(mode, verdicts)
+        problems = [] if only else INVARIANTS[mode](spark, sf_dir, load_all())
+        return report(mode, verdicts, problems, f", {len(problems)} invariant failures")
     if mode == "retry":
-        return retry_audit(set(sys.argv[2:]))
-    only = set(sys.argv[2:])
-    sf_dir = build_mutated(mode)
-
-    from datalake_nba_dmc_spark.session import get_spark
-    from datalake_nba_dmc_spark.suite import load_all
-    from tools.verify_local import compare, oracle_connection
-
-    specs = load_all()
-    spark = get_spark(f"robustness_{mode}")
-    con = oracle_connection(sf_dir)
-
-    known = {
-        "empty": KNOWN_EMPTY,
-        "nulls": KNOWN_NULLS,
-        "skew": KNOWN_SKEW,
-        "dup": KNOWN_DUP,
-    }[mode]
-    n_pass = n_fail = n_rows_only = n_crash = n_known = 0
-    failures: list[str] = []
-    for name, spec in sorted(specs.items()):
-        if only and name not in only:
-            continue
-        try:
-            spdf = spec.builder(spark, sf_dir).toPandas()
-        except ValueError as e:
-            if known.get(name) == "raises" and "empty input" in str(e):
-                print(f"KNOWN {name}: raises by design: {e}")
-                n_known += 1
-                continue
-            print(f"CRASH {name}: spark: ValueError: {str(e).splitlines()[0][:160]}")
-            n_crash += 1
-            failures.append(name)
-            continue
-        except Exception as e:
-            print(f"CRASH {name}: spark: {type(e).__name__}: {str(e).splitlines()[0][:160]}")
-            n_crash += 1
-            failures.append(name)
-            continue
-        kn = known.get(name)
-        if kn and kn != "raises":
-            reason = (
-                "engine divergence on empty grouping sets" if kn == "diverges" else kn
-            )
-            print(f"KNOWN {name}: {reason}")
-            n_known += 1
-            continue
-        if spec.oracle is None:
-            print(f"ROWS {name}: {len(spdf)} rows (no oracle)")
-            n_rows_only += 1
-            continue
-        try:
-            odf = con.execute(spec.oracle).df()
-        except Exception as e:
-            print(f"CRASH {name}: duckdb: {type(e).__name__}: {str(e).splitlines()[0][:160]}")
-            n_crash += 1
-            failures.append(name)
-            continue
-        problems = compare(spdf, odf)
-        if problems:
-            print(f"FAIL {name}: {'; '.join(problems)}")
-            n_fail += 1
-            failures.append(name)
-        else:
-            print(f"PASS {name} ({len(spdf)} rows)")
-            n_pass += 1
-    invariant_problems: list[str] = []
-    if mode == "skew" and not only:
-        invariant_problems = skew_invariants(spark, sf_dir, specs)
-    elif mode == "dup" and not only:
-        invariant_problems = dup_invariants(spark, sf_dir, specs)
-    for p in invariant_problems:
-        print(f"FAIL invariant: {p}")
-    print(
-        f"\n[{mode}] {n_pass} pass, {n_fail} mismatch, {n_crash} crash, "
-        f"{n_rows_only} rows-only, {n_known} known"
-        + (
-            f", {len(invariant_problems)} invariant failures"
-            if mode in ("skew", "dup")
-            else ""
+        # local[N,3]: maxFailures 3, so a failed task is retried instead
+        # of failing its job
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+        spark = get_spark("robustness_retry", master=f"local[{cpus},3]")
+        # every injected failure logs a stack trace; real failures still
+        # surface as Python exceptions (CRASH lines)
+        spark.sparkContext.setLogLevel("OFF")
+        if not _retry_canary(spark):
+            print("CONF-INEFFECTIVE: retry injection canary failed")
+            return 1
+    else:
+        spark = get_spark(f"robustness_{mode}")
+    verdicts, spilled = same_data(spark, names, TRIALS[mode])
+    if mode != "spill":
+        return report(mode, verdicts)
+    status = report(mode, verdicts, extra=f"; spilled_bytes_receipt={spilled['spill']}")
+    if spilled["spill"] == 0 and not only:
+        print(
+            "CONF-INEFFECTIVE: zero bytes spilled across the whole audit — "
+            "the spill confs no longer engage; the pass is vacuous"
         )
-    )
-    if failures:
-        print("failures:", " ".join(sorted(failures)))
-    return 1 if (n_fail or n_crash or invariant_problems) else 0
+        return 1
+    return status
 
 
 if __name__ == "__main__":
