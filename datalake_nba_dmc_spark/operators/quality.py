@@ -62,13 +62,6 @@ def in_range(col: str, lo, hi) -> Rule:
     return Rule(f"in_range_{col}", "predicate", v)
 
 
-def expect_predicate(name: str, violation: Column) -> Rule:
-    """Escape hatch: any boolean expression, True ⇒ violation. Must be
-    null-safe (wrap in ``coalesce(..., lit(False))`` if the expression
-    can evaluate to NULL)."""
-    return Rule(name, "predicate", violation)
-
-
 def unique(*cols: str) -> Rule:
     """Violations = rows in excess of one per distinct key (null keys
     form a group like any other, matching ``GROUP BY`` semantics)."""

@@ -25,14 +25,30 @@ Job-for-job mapping (reference file → stage here):
 Each stage writes with :func:`datalake_nba_dmc_spark.sinks.write_table`
 (plain overwrite, natural partitioning) instead of the reference's
 coalesce(1)+boto3-rename (``:85-106``) — see sinks.py for why.
+
+Within a stage no table reads another's output, so :meth:`LayerIO.write_all`
+writes a stage's tables concurrently, one ``InheritableThread`` per table:
+the small tables' one-task jobs then share the cores instead of queueing,
+and every job keeps the caller's job group and description. The stage
+returns only after every write has finished, and raises the first table's
+failure (in the stage's table order) if any write failed. A failed write
+can still leave its own table unreadable (Spark deletes the old files
+before the job runs); the others of the stage are written regardless.
+
+Path-mode :class:`LayerIO` also remembers the schema of every table it
+wrote, so the next stage's reads of those tables skip Parquet's
+schema-inference job (one job per read otherwise).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from datalake_nba_dmc_spark.operators import aggregates as agg
 from datalake_nba_dmc_spark.operators import conform, joins, windows
@@ -49,22 +65,43 @@ def _out(base: str, layer: str, name: str) -> str:
     return os.path.join(base, layer, name)
 
 
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` as a file-source read returns it: Spark writes files and
+    reads them back with every field, element and value nullable."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
 class LayerIO:
     """Layer-addressed table IO for the pipeline, in two modes.
 
-    ``use_catalog=False`` (default): plain path reads/writes, exactly as
-    before. ``use_catalog=True``: each medallion layer becomes a session-
-    catalog database (``db_bronze``/``db_silver``/``db_gold`` — the open
-    equivalent of the reference's Glue databases, reference
-    ``aws-job-landing-to-bronze/aws-job-landing-to-bronze.py:22-37``) and
-    stages address tables as (database, table); data still lands at the
-    SAME layer paths as external-table locations, so path-mode readers see
-    identical bytes."""
+    ``use_catalog=False`` (default): plain path reads/writes. The instance
+    records the schema of every table it writes (``schemas``, path ->
+    schema as a read returns it), and :meth:`read` of a recorded path
+    passes that schema to the reader, so no job re-derives it from the
+    Parquet footers. Paths this instance did not write are read with
+    inference, as before. ``use_catalog=True``: each medallion layer
+    becomes a session-catalog database (``db_bronze``/``db_silver``/
+    ``db_gold`` — the open equivalent of the reference's Glue databases,
+    reference ``aws-job-landing-to-bronze/aws-job-landing-to-bronze.py:22-37``)
+    and stages address tables as (database, table); data still lands at
+    the SAME layer paths as external-table locations, so path-mode readers
+    see identical bytes.
+
+    :meth:`write_all` writes one stage's tables concurrently."""
 
     def __init__(self, spark: SparkSession, out_dir: str, use_catalog: bool = False):
         self.spark = spark
         self.out_dir = out_dir
         self.use_catalog = use_catalog
+        self.schemas: dict[str, StructType] = {}
 
     def _db(self, layer: str) -> str:
         db = f"db_{layer}"
@@ -76,39 +113,79 @@ class LayerIO:
         if self.use_catalog:
             save_catalog_table(df, self._db(layer), name, path=path)
         else:
+            # a failed overwrite leaves the table empty: no recorded
+            # schema may then make it read back as zero rows
+            self.schemas.pop(path, None)
             write_table(df, path)
+            self.schemas[path] = _as_nullable(df.schema)
         return path
+
+    def write_all(
+        self, layer: str, builds: dict[str, Callable[[], DataFrame]]
+    ) -> dict[str, str]:
+        """Build and write each table of ``builds`` (name -> builder) on a
+        thread of its own; returns name -> path in ``builds``' order.
+
+        The threads inherit the caller's local properties (job group,
+        description), so every job they launch is counted where the
+        caller's would be. The call returns after every thread has
+        finished; if any build or write raised, it then re-raises the
+        first such error in ``builds``' order."""
+        if self.use_catalog:
+            self._db(layer)  # CREATE DATABASE once, before the threads
+        paths: dict[str, str] = {}
+        errors: dict[str, BaseException] = {}
+
+        def run(name: str) -> None:
+            try:
+                paths[name] = self.write(builds[name](), layer, name)
+            except BaseException as e:  # noqa: BLE001 — re-raised below
+                errors[name] = e
+
+        threads = [InheritableThread(run, args=(name,)) for name in builds]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        for name in builds:
+            if name in errors:
+                raise errors[name]
+        return {name: paths[name] for name in builds}
 
     def read(self, layer: str, name: str) -> DataFrame:
         if self.use_catalog:
             return read_catalog_table(self.spark, self._db(layer), name)
-        return read_table(self.spark, _out(self.out_dir, layer, name))
+        path = _out(self.out_dir, layer, name)
+        schema = self.schemas.get(path)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(path)
+        return read_table(self.spark, path)
 
 
 def landing_to_bronze(spark: SparkSession, sf_dir: str, io: LayerIO) -> dict[str, str]:
-    """Landing → Bronze: type hardening + cleaning per table."""
-    paths: dict[str, str] = {}
+    """Landing → Bronze: type hardening + cleaning per table. Each table's
+    whole chain (load, the downcast's bounds job, write) runs on its own
+    thread."""
 
-    orders = load_table(spark, sf_dir, "orders")
-    orders = conform.safe_downcast_longs(orders)
-    orders = conform.with_derived(
-        orders, o_orderdate=F.col("o_orderdate").cast("date")
+    def orders() -> DataFrame:
+        df = conform.safe_downcast_longs(load_table(spark, sf_dir, "orders"))
+        return conform.with_derived(df, o_orderdate=F.col("o_orderdate").cast("date"))
+
+    def lineitem() -> DataFrame:
+        return conform.safe_downcast_longs(load_table(spark, sf_dir, "lineitem"))
+
+    def customer() -> DataFrame:
+        # dim table: whole-row dedup, like the reference's season bio table
+        # (aws-job-landing-to-bronze.py:59)
+        return agg.dedup_rows(load_table(spark, sf_dir, "customer"))
+
+    def nation() -> DataFrame:
+        return load_table(spark, sf_dir, "nation")
+
+    return io.write_all(
+        "bronze",
+        {"orders": orders, "lineitem": lineitem, "customer": customer, "nation": nation},
     )
-    paths["orders"] = io.write(orders, "bronze", "orders")
-
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    lineitem = conform.safe_downcast_longs(lineitem)
-    paths["lineitem"] = io.write(lineitem, "bronze", "lineitem")
-
-    # dim table: whole-row dedup, like the reference's season bio table
-    # (aws-job-landing-to-bronze.py:59)
-    customer = agg.dedup_rows(load_table(spark, sf_dir, "customer"))
-    paths["customer"] = io.write(customer, "bronze", "customer")
-
-    nation = load_table(spark, sf_dir, "nation")
-    paths["nation"] = io.write(nation, "bronze", "nation")
-
-    return paths
 
 
 def bronze_to_silver(spark: SparkSession, io: LayerIO) -> dict[str, str]:
@@ -128,7 +205,6 @@ def bronze_to_silver(spark: SparkSession, io: LayerIO) -> dict[str, str]:
         on="custkey",
         broadcast_right=True,
     )
-    p1 = io.write(orders_customer, "silver", "orders_customer")
 
     # J3-style: fact enriched through two joins with a derived key
     li = conform.with_derived(
@@ -145,11 +221,16 @@ def bronze_to_silver(spark: SparkSession, io: LayerIO) -> dict[str, str]:
         on="o_custkey",
         broadcast_right=True,
     )
-    p2 = io.write(li_full, "silver", "lineitem_enriched")
 
     # dim conformed for gold (J2-style derived join key parallel: nation name)
-    p3 = io.write(nation, "silver", "nation")
-    return {"orders_customer": p1, "lineitem_enriched": p2, "nation": p3}
+    return io.write_all(
+        "silver",
+        {
+            "orders_customer": lambda: orders_customer,
+            "lineitem_enriched": lambda: li_full,
+            "nation": lambda: nation,
+        },
+    )
 
 
 def silver_to_silver(spark: SparkSession, io: LayerIO) -> dict[str, str]:

@@ -41,7 +41,9 @@ def _write_schema_sidecar(df: DataFrame, path: str) -> None:
     table for every downstream reader. Table formats solve this with a
     metadata layer; absent those jars, the sidecar + the
     :func:`read_table` fallback keep the empty table readable with its
-    exact schema. Found by ``tools/robustness_audit.py empty``."""
+    exact schema. Found by ``tools/robustness_audit.py empty``. Written
+    on every partitioned write; read only when inference finds no data
+    file, so a non-empty table reads back with its inferred schema."""
     spark = df.sparkSession
     p = spark._jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + _SCHEMA_SIDECAR)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -83,9 +85,10 @@ def write_table(
 
     Empty-input safety: an unpartitioned write of zero rows emits one
     schema-bearing (footer-only) file, so the table stays readable; a
-    PARTITIONED write of zero rows emits nothing, so a schema sidecar is
-    written for :func:`read_table` to fall back on. The emptiness probe
-    is a ``limit(1)`` job — noise next to the write itself.
+    PARTITIONED write of zero rows emits nothing, so every partitioned
+    write also writes a schema sidecar for :func:`read_table` to fall
+    back on (one small file; an emptiness probe would run the plan a
+    second time).
 
     Partition on canonical, NON-EMPTY keys only: hive partition-value
     encoding is lossy for degenerate strings — NULL and ``''`` both
@@ -97,7 +100,7 @@ def write_table(
         w = w.partitionBy(*partition_by)
     w.save(path)
     invalidate_partition_memo()
-    if partition_by and df.isEmpty():
+    if partition_by:
         _write_schema_sidecar(df, path)
 
 
@@ -147,8 +150,7 @@ def overwrite_partitions(
     # an empty batch replaces no partitions (correct no-op on an existing
     # table), but against a brand-new path it leaves a file-less directory;
     # the sidecar keeps that readable (see _write_schema_sidecar)
-    if df.isEmpty():
-        _write_schema_sidecar(df, path)
+    _write_schema_sidecar(df, path)
 
 
 def write_bucketed(

@@ -6,6 +6,7 @@ import os
 
 import pytest
 
+from datalake_nba_dmc_spark.plans import medallion
 from datalake_nba_dmc_spark.plans.medallion import run_pipeline
 from datalake_nba_dmc_spark.sinks import compact, read_table, write_table
 
@@ -17,13 +18,27 @@ needs_testdata = pytest.mark.skipif(
 
 
 @needs_testdata
-def test_medallion_pipeline_end_to_end(spark, tmp_path):
+def test_medallion_pipeline_end_to_end(spark, tmp_path, monkeypatch):
+    made = []
+
+    class RecordingIO(medallion.LayerIO):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            made.append(self)
+
+    monkeypatch.setattr(medallion, "LayerIO", RecordingIO)
     out = run_pipeline(spark, SF0001, str(tmp_path))
     assert set(out) == {
         "bronze/orders", "bronze/lineitem", "bronze/customer", "bronze/nation",
         "silver/orders_customer", "silver/lineitem_enriched", "silver/nation",
         "silver/customer_daily", "gold/customer_resume", "gold/nation_resume",
     }
+    # the schema LayerIO recorded for each table is the one inference
+    # reads back from the table's files
+    (io,) = made
+    assert set(io.schemas) == set(out.values())
+    for path in out.values():
+        assert io.schemas[path] == read_table(spark, path).schema, path
 
     resume = read_table(spark, out["gold/customer_resume"])
     n_customers = read_table(spark, out["bronze/customer"]).count()
@@ -80,6 +95,110 @@ def test_partitioned_write_prunes(spark, tmp_path):
     # partition pruning visible in the scan
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(part" in plan
+
+
+def test_partitioned_write_reads_inferred_schema_beside_sidecar(spark, tmp_path):
+    """Every partitioned write leaves the schema sidecar; a table with
+    data files still reads back with its inferred schema (the ISO-date
+    partition values come back as dates, where the sidecar says string)."""
+    df = spark.createDataFrame([(i, f"2024-01-0{1 + i % 3}") for i in range(9)], ["id", "day"])
+    path = str(tmp_path / "pt")
+    write_table(df, path, partition_by=["day"])
+    assert os.path.isfile(os.path.join(path, "_SCHEMA.json"))
+    back = read_table(spark, path)
+    assert dict(back.dtypes) == {"id": "bigint", "day": "date"}
+    assert back.count() == 9
+
+
+def _stage_jobs(spark, group: str, run) -> tuple[list[int], list[int]]:
+    """(every job id launched while ``run()`` ran under job group
+    ``group``, the ids the status tracker files under ``group``). Fences
+    are one-task jobs in groups of their own; job ids are sequential."""
+    sc = spark.sparkContext
+
+    def fence(tag: str) -> int:
+        sc.setJobGroup(f"{group}-{tag}", tag)
+        sc.parallelize([0], 1).count()
+        (j,) = sc.statusTracker().getJobIdsForGroup(f"{group}-{tag}")
+        return j
+
+    try:
+        start = fence("start")
+        sc.setJobGroup(group, "stage under test")
+        run()
+        end = fence("end")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(range(start + 1, end)), sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@needs_testdata
+def test_stage_threads_keep_the_callers_job_group(spark, tmp_path):
+    """The write threads inherit the caller's job group: every job the two
+    concurrent stages launch is filed under it, none under no group."""
+    io = medallion.LayerIO(spark, str(tmp_path))
+
+    def stages():
+        medallion.landing_to_bronze(spark, SF0001, io)
+        medallion.bronze_to_silver(spark, io)
+
+    launched, grouped = _stage_jobs(spark, "medallion-threads", stages)
+    # 4 bronze writes, 3 silver writes, at least one bounds job
+    assert len(launched) >= 8
+    assert grouped == launched
+
+
+def test_write_all_keeps_every_table_under_contention(spark, tmp_path):
+    """More write threads than cores, switching often: every table's path
+    comes back in order, its schema is recorded, and a read through the
+    recorded schema returns its rows."""
+    import sys
+
+    io = medallion.LayerIO(spark, str(tmp_path))
+    builds = {f"t{i}": (lambda i=i: spark.range(i + 1)) for i in range(8)}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        paths = io.write_all("bronze", builds)
+    finally:
+        sys.setswitchinterval(interval)
+    assert list(paths) == list(builds)
+    assert set(io.schemas) == set(paths.values())
+    assert [io.read("bronze", name).count() for name in builds] == list(range(1, 9))
+
+
+@needs_testdata
+def test_stage_reraises_a_failed_write_after_every_thread(spark, tmp_path, monkeypatch):
+    """One table whose UDF raises fails the stage with that error, only
+    after every write thread has finished; the other tables are written."""
+    from pyspark.sql import functions as F
+
+    @F.udf("int")
+    def boom(x):
+        raise ValueError("injected nation failure")
+
+    def load(spark_, sf_dir, name):
+        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        return df.withColumn("n_nationkey", boom("n_nationkey")) if name == "nation" else df
+
+    threads = []
+
+    class Tracked(medallion.InheritableThread):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            threads.append(self)
+
+    monkeypatch.setattr(medallion, "load_table", load)
+    monkeypatch.setattr(medallion, "InheritableThread", Tracked)
+    io = medallion.LayerIO(spark, str(tmp_path))
+    with pytest.raises(Exception, match="injected nation failure"):
+        medallion.landing_to_bronze(spark, SF0001, io)
+    assert len(threads) == 4
+    for t in threads:
+        t.join(timeout=60)
+        assert not t.is_alive()
+    for name in ("orders", "lineitem", "customer"):
+        assert read_table(spark, str(tmp_path / "bronze" / name)).count() > 0
 
 
 def test_curation_pipeline_toy_corpus(spark):

@@ -48,8 +48,11 @@ equal confs share one build of the query.
 - ``spill`` — window, sort-merge-join, cartesian and session-window
   buffers forced to spill after 2 rows and object-hash aggregation forced
   into its sort fallback. The receipt is the bytes the spill trials'
-  jobs spilled, read from the status store; zero over the full registry
-  prints ``CONF-INEFFECTIVE`` and fails the audit as vacuous.
+  jobs spilled, read from the status store per query (every same-data
+  PASS line ends with its query's bytes per trial); the summary counts
+  the queries whose spill trial spilled 0 B, which this mode did not
+  exercise. Zero over the full registry prints ``CONF-INEFFECTIVE`` and
+  fails the audit as vacuous.
 - ``retry`` — every result-stage task fails its first attempt under a
   ``local[N,3]`` master, so the scheduler re-runs it: non-idempotent
   accumulators and seed-per-attempt bugs. A canary job first proves the
@@ -889,14 +892,15 @@ def _run_trial(spark, trial: Trial, build) -> tuple[pd.DataFrame, int]:
 
 def same_data(
     spark, names, trials: list[Trial], sf_dir: str = SRC
-) -> tuple[dict[str, str], dict[str, int]]:
+) -> tuple[dict[str, str], dict[str, dict[str, int]]]:
     """Run each named query once per trial over ``sf_dir``, print one line
     per query, and return its verdict — PASS (every trial returned the
-    same rows and canonical hash), FAIL or CRASH — plus the bytes spilled
-    per trial label."""
+    same rows and canonical hash), FAIL or CRASH — plus, per query, the
+    bytes each finished trial spilled (name -> label -> bytes). A PASS
+    line ends with those bytes, in trial order."""
     specs = load_all()
     verdicts: dict[str, str] = {}
-    spilled = dict.fromkeys((t.label for t in trials), 0)
+    spilled: dict[str, dict[str, int]] = {}
     for name in names:
         # trials with equal confs share one build, so they differ only in
         # how they collect (retry: one DataFrame, collected clean and retried)
@@ -905,17 +909,18 @@ def same_data(
             return specs[name].builder(spark, sf_dir)
 
         results = []
+        spilled[name] = {}
         try:
             for t in trials:
-                pdf, nbytes = _run_trial(spark, t, build)
+                pdf, spilled[name][t.label] = _run_trial(spark, t, build)
                 results.append((t.label, len(pdf), canonical_hash(pdf)))
-                spilled[t.label] += nbytes
         except Exception as e:  # noqa: BLE001
             record(verdicts, name, "CRASH", f" [{t.label}]: {crash_line(e)}")
             continue
         if len({(n, h) for _, n, h in results}) == 1:
             labels = "==".join(lbl for lbl, _, _ in results)
-            record(verdicts, name, "PASS", f" ({results[0][1]} rows, {labels})")
+            nbytes = " / ".join(f"{b:,} B" for b in spilled[name].values())
+            record(verdicts, name, "PASS", f" ({results[0][1]} rows, {labels}; spilled {nbytes})")
         else:
             detail = "; ".join(f"{lbl}: {n} rows {h}" for lbl, n, h in results)
             record(verdicts, name, "FAIL", f": result differs across trials — {detail}")
@@ -1159,8 +1164,15 @@ def main() -> int:
     verdicts, spilled = same_data(spark, names, TRIALS[mode])
     if mode != "spill":
         return report(mode, verdicts)
-    status = report(mode, verdicts, extra=f"; spilled_bytes_receipt={spilled['spill']}")
-    if spilled["spill"] == 0 and not only:
+    per_query = [by_label["spill"] for by_label in spilled.values() if "spill" in by_label]
+    receipt = sum(per_query)
+    status = report(
+        mode,
+        verdicts,
+        extra=f"; spilled_bytes_receipt={receipt}; "
+        f"{per_query.count(0)} not exercised (0 B spilled)",
+    )
+    if receipt == 0 and not only:
         print(
             "CONF-INEFFECTIVE: zero bytes spilled across the whole audit — "
             "the spill confs no longer engage; the pass is vacuous"
