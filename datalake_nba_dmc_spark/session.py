@@ -11,6 +11,17 @@ with a plain open-source ``SparkSession``. Configuration is chosen for the
   target ~128 MB per shuffle partition.
 - Arrow enabled so Pandas-UDF extension operators get vectorized batches.
 - UTC session timezone so date/timestamp semantics match the DuckDB oracle.
+- A generated-class cache sized to the engine's working set
+  (``CODEGEN_CACHE_ENTRIES``). Spark keeps compiled codegen classes in an
+  LRU of ``spark.sql.codegen.cache.maxEntries`` entries, 100 by default.
+  One ``medallion_replicated`` pass of perfbench uses 116 distinct
+  classes and one ``curation_ops`` pass 222, so at the default every pass
+  evicted each class before its next use: every warm pass recompiled
+  93-108 (medallion) or 216 (curation) classes, 0.4-1.0 s and 0.9-2.7 s
+  of Janino, and each recompiled class restarted in the JVM's
+  interpreter. With the larger cache a warm pass compiles none (now and
+  then 6), so codegen is a cold-pass cost only. The conf is static, so
+  it is set on the builder, not in ``RUNTIME_CONFS``.
 """
 
 from __future__ import annotations
@@ -55,6 +66,15 @@ RUNTIME_CONFS = {
 }
 
 
+#: Entries in Spark's compiled-class cache (a static conf: it is read once,
+#: when the JVM first generates code). The largest per-pass working set
+#: measured is 222 classes (``curation_ops``); Guava divides the capacity
+#: over 4 segments and evicts per segment, so one segment can fill while
+#: the whole cache is far from full. 1000 leaves each segment room for the
+#: whole working set.
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply the engine's dynamic SQL confs to a possibly-foreign session."""
     for k, v in RUNTIME_CONFS.items():
@@ -83,8 +103,25 @@ def get_spark(app_name: str = "datalake_nba_dmc_spark", master: str | None = Non
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return apply_runtime_confs(spark)
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """Generated classes this JVM has compiled so far, and the milliseconds
+    Janino spent on them.
+
+    The count is ``CodegenMetrics``' compile-time histogram's (exact: one
+    update per compile); the time is ``CodeGenerator.compileTime``, the
+    nanosecond sum Spark keeps beside it, because the histogram's reservoir
+    samples its values. Both are JVM-wide, so take a difference around the
+    work to count it.
+    """
+    jvm = spark._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return count, nanos / 1e6

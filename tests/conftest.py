@@ -11,6 +11,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+from datalake_nba_dmc_spark.session import CODEGEN_CACHE_ENTRIES
+
 SF0001 = "/root/testdata/sf0.001"
 
 
@@ -25,6 +27,7 @@ def spark() -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/spark-test-warehouse")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

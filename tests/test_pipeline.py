@@ -8,6 +8,7 @@ import pytest
 
 from datalake_nba_dmc_spark.plans import medallion
 from datalake_nba_dmc_spark.plans.medallion import run_pipeline
+from datalake_nba_dmc_spark.session import codegen_compiles
 from datalake_nba_dmc_spark.sinks import compact, read_table, write_table
 
 SF0001 = "/root/testdata/sf0.001"
@@ -15,6 +16,21 @@ SF0001 = "/root/testdata/sf0.001"
 needs_testdata = pytest.mark.skipif(
     not os.path.isdir(SF0001), reason="driver testdata not present"
 )
+
+
+@needs_testdata
+def test_warm_pipeline_pass_compiles_no_generated_classes(spark, tmp_path):
+    """Spark's codegen cache holds a whole pipeline pass: the second run
+    reuses the first run's generated classes instead of recompiling them.
+    (First in this file, so its first run is the session's first pipeline.)"""
+    compiled = []
+    for _ in range(2):
+        before, _ = codegen_compiles(spark)
+        run_pipeline(spark, SF0001, str(tmp_path))
+        compiled.append(codegen_compiles(spark)[0] - before)
+    print(f"classes compiled, first run / second run: {compiled}")
+    first, second = compiled
+    assert second <= 0.1 * first, compiled
 
 
 @needs_testdata

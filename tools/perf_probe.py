@@ -7,7 +7,10 @@ Usage:
 For each named suite query, every pass times what perfbench times:
 ``spark.catalog.clearCache()``, then the builder call (so eager builders
 and the intermediates they persist are billed each pass), then the noop
-write of the returned frame. Prints per-pass seconds + min. With
+write of the returned frame. Prints per-pass seconds + min, then per pass
+the generated classes compiled and Janino's milliseconds
+(``session.codegen_compiles``): a warm pass that compiles anything means
+the codegen cache is evicting the query's classes. With
 ``--tag`` it also writes ``.explain("formatted")`` to
 <plans-dir>/<name>_<tag>.txt (guide §1 "capture the plan shape").
 Jobs are labelled per query (guide §1.5).
@@ -22,7 +25,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from datalake_nba_dmc_spark.session import get_spark
+from datalake_nba_dmc_spark.session import codegen_compiles, get_spark
 from datalake_nba_dmc_spark.suite import load_all
 
 
@@ -61,18 +64,23 @@ def main() -> None:
         if args.plans_only:
             print(f"{name}: plan written")
             continue
-        times = []
+        times, compiles = [], []
         for p in range(args.passes):
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"probe: {name} pass {p}")
+            n0, ms0 = codegen_compiles(spark)
             start = time.perf_counter()
             spec.builder(spark, args.sf).write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - start)
+            n1, ms1 = codegen_compiles(spark)
+            compiles.append((n1 - n0, ms1 - ms0))
         spark.sparkContext.setJobDescription(None)
         print(
             f"{name}: "
             + " ".join(f"{t:.3f}" for t in times)
             + f"  min={min(times):.3f}"
+            + "  compiled: "
+            + " ".join(f"{n}/{ms:.0f}ms" for n, ms in compiles)
         )
 
 
